@@ -427,7 +427,14 @@ class PinotCatalog:
         )
 
     def register_all(self, spark) -> list[str]:
-        """Create one temp view per table; returns the registered names."""
+        """Create one temp view per table; returns the registered names.
+
+        Each view is one ``load()``, and Spark 4.1 caches that load's scan
+        plan, re-running the pushdown only for queries with filters to
+        push: an unfiltered query through a view after a filtered one
+        returns the filtered answer (tests/test_reused_scan.py). Until
+        that is fixed, query a fresh ``load_table`` per statement when a
+        view would see both kinds of query."""
         registered = []
         for name in self.table_names():
             self.load_table(spark, name).createOrReplaceTempView(name)

@@ -67,11 +67,6 @@ def money(col) -> Column:
     return col.cast("decimal(18,2)")
 
 
-def dsum(col, scale: int = 2) -> Column:
-    """Exact decimal SUM surfaced as a rounded double."""
-    return F.round(F.sum(money(col)).cast("double"), scale)
-
-
 def davg(col, scale: int = 4) -> Column:
     """AVG as exact-decimal sum / count, rounded — engine-stable."""
     return F.round(

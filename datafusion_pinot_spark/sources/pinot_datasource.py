@@ -4,22 +4,30 @@ Spark-side equivalent of the reference's DataFusion integration
 (reference datafusion-pinot/src/table.rs + exec.rs), re-expressed on the
 PySpark 4 Data Source API:
 
-- one ``InputPartition`` per segment directory — the segment is the unit of
-  parallelism, as in the reference (exec.rs:41 ``num_partitions =
-  segments.len()``);
+- one ``InputPartition`` per segment directory by default — the segment is
+  the unit of parallelism, as in the reference (exec.rs:41
+  ``num_partitions = segments.len()``); the ``segments_per_partition``
+  option packs N segments (or ``auto``: a manifest doc-count target) per
+  task, and an unfiltered COUNT(*) packs on its own;
 - table schema derived from the *first* segment's metadata (table.rs:115-118),
   in metadata-declared column order (deterministic — fixes the reference's
-  HashMap-order hazard, SURVEY.md §4.3), all columns non-nullable
-  (schema.rs:29-30);
-- the reader materializes each projected column once per partition and yields
-  8,192-row Arrow batches sliced from it (exec.rs:24,65-66,241-248);
+  HashMap-order hazard, SURVEY.md §4.3), nullable where any segment holds
+  NULLs or predates the column;
+- what a scan reads is one frozen ``ScanSpec`` (columns, their Spark types,
+  pushed filters, text/JSON/MV probes, head/tail); the batch, stream and CDC
+  readers all run it through one per-segment pipeline
+  (``_scan_segment``: open → schema-evolution filter rewrite → bloom skip →
+  row range → masks → decode/NULL-fill) and emit each segment's natural
+  Arrow chunks — Spark re-slices JVM-side;
 - projection pushdown via the ``columns`` load option (the Python DS API has
   no pruned-schema callback yet; the reference gets indices from DataFusion,
   table.rs:161-169);
 - filter pushdown (a rebuild *improvement* — the reference ignores filters,
   table.rs:163): supported predicates are evaluated (a) per segment against
-  sorted-dictionary min/max zone maps to skip whole segments, and (b) per
-  row with numpy masks before Arrow conversion.
+  min/max zone maps to skip whole segments, and (b) per row with numpy
+  masks before Arrow conversion;
+- the metadata-only scans (``dictionary_only``, ``value_counts``,
+  ``segment_stats``) run in their own ``PinotMetadataReader``.
 
 Usage::
 
@@ -36,8 +44,10 @@ single segment dir (containing ``v3/``), or a ``v3`` dir itself; or pass
 
 from __future__ import annotations
 
+import operator
 import os
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
+from itertools import chain
 from typing import TYPE_CHECKING, Iterator
 
 from pyspark.sql.datasource import (
@@ -80,8 +90,6 @@ from pyspark.sql.types import (
 
 if TYPE_CHECKING:  # pragma: no cover
     import pyarrow as pa
-
-BATCH_ROWS = 8192  # reference exec.rs:24
 
 _SPARK_TYPES = {
     "INT": IntegerType(),
@@ -128,18 +136,14 @@ def _discover_segments(path: str) -> list[str]:
     metadata_provider.rs:184-199 semantics), a segment dir containing ``v3``,
     or a ``v3`` dir itself.
     """
+    from pinot_segment.manifest import _segment_v3_dirs
+
     if os.path.isfile(os.path.join(path, "metadata.properties")):
         return [path]
     v3 = os.path.join(path, "v3")
     if os.path.isdir(v3):
         return [v3]
-    segs = []
-    for entry in sorted(os.listdir(path)):
-        if entry == "tmp":
-            continue
-        child_v3 = os.path.join(path, entry, "v3")
-        if os.path.isdir(child_v3):
-            segs.append(child_v3)
+    segs = _segment_v3_dirs(path)
     if not segs:
         raise ValueError(f"No valid Pinot v3 segments found under {path}")
     return segs
@@ -178,19 +182,75 @@ def _table_nullable_columns(
             md = SegmentMetadata.from_file(
                 os.path.join(seg, "metadata.properties")
             )
-            for name, cm in md.columns.items():
-                if cm.has_null_values:
-                    nullable.add(name)
-            # schema evolution: a requested column this segment predates
-            # is all-NULL in its batches
-            nullable.update(n for n in want if n not in md.columns)
-        else:
-            for name, cs in cols.items():
-                if cs.get("has_nulls"):
-                    nullable.add(name)
-            # complete census: absence == the segment predates the column
-            nullable.update(n for n in want if n not in cols)
+            cols = {
+                name: {"has_nulls": cm.has_null_values}
+                for name, cm in md.columns.items()
+            }
+        nullable.update(n for n, cs in cols.items() if cs.get("has_nulls"))
+        # schema evolution: a requested column this segment predates (a
+        # complete census lacks it) is all-NULL in its batches
+        nullable.update(n for n in want if n not in cols)
     return nullable
+
+
+@dataclass(frozen=True)
+class ScanSpec:
+    """What one scan reads, shared by every task of the scan.
+
+    The batch reader fixes it once filters are pushed; the stream and CDC
+    readers carry columns and types only."""
+
+    columns: tuple[str, ...]
+    # Spark simpleString type per column (parallel to `columns`): lets the
+    # read task synthesize all-NULL arrays for columns a segment predates
+    # (schema evolution — Pinot's add-column-with-default behavior).
+    column_types: tuple[str, ...] = ()
+    filters: tuple = ()
+    # Row probes, (kind, column, argument) with kind a key of _PROBES:
+    # TEXT_MATCH over a text_index, JSON_MATCH over a json_index, and MV
+    # containment over an MV inverted index. Each is answered from its
+    # index when the segment has one, by decode-and-test otherwise — same
+    # result — and ANDs into the row mask like a pushed filter.
+    probes: tuple = ()
+    # Top-k pushdown for sorted tables: a (column, k) pair from the `head`
+    # (first k rows in column order) or `tail` (last k) read option.
+    # Planning prunes segments that provably sit entirely past those rows
+    # (manifest min/max/docs); each surviving sorted segment decodes only
+    # its first (last) k rows extended through the tie group, so a
+    # Spark-side orderBy(col [DESC], ...).limit(k) stays exact. Unsorted
+    # segments decode fully (correct, just unaccelerated).
+    head: "tuple[str, int] | None" = None
+    tail: "tuple[str, int] | None" = None
+
+    def __post_init__(self) -> None:
+        # head/tail compose ONLY with a predicate-free top-k: "first k
+        # physical rows" is not "first k rows of a filtered result", so
+        # any pushed filter or probe disables them (correct, unaccelerated)
+        if self.filters or self.probes:
+            object.__setattr__(self, "head", None)
+            object.__setattr__(self, "tail", None)
+
+    @classmethod
+    def of(cls, fields, **kw) -> "ScanSpec":
+        return cls(
+            tuple(f.name for f in fields),
+            tuple(f.dataType.simpleString() for f in fields),
+            **kw,
+        )
+
+    def cuts(self) -> list:
+        """The head/tail cuts as ((column, k), reverse) pairs."""
+        return [
+            (cut, reverse)
+            for cut, reverse in ((self.head, False), (self.tail, True))
+            if cut is not None
+        ]
+
+    def counts_only(self) -> bool:
+        """An unfiltered COUNT(*): row counts are all the scan needs."""
+        return not (
+            self.columns or self.filters or self.probes or self.cuts()
+        )
 
 
 @dataclass
@@ -204,46 +264,18 @@ class PinotInputPartition(InputPartition):
     (frequent small ingests) pack several segments per task via the
     ``segments_per_partition`` read option, amortizing the per-task
     scheduling + Python-worker handoff cost the same way Spark's file
-    sources coalesce small files into one split."""
+    sources coalesce small files into one split. What to read from them is
+    the reader's ``ScanSpec``."""
 
     segment_dirs: tuple[str, ...]
-    columns: tuple[str, ...]
-    filters: tuple = ()
-    # Spark simpleString type per column (parallel to `columns`): lets the
-    # read task synthesize all-NULL arrays for columns a segment predates
-    # (schema evolution — Pinot's add-column-with-default behavior).
-    column_types: tuple = ()
-    # Text-match probe (Pinot's TEXT_MATCH over a text_index): a
-    # (column, terms-tuple, require_all) triple from the `text_match` read
-    # option, or None. Answered from the segment's token->bitmap postings
-    # when present, by decode-and-tokenize otherwise — same analyzer, same
-    # result.
-    text_match: "tuple[str, tuple[str, ...], bool] | None" = None
-    # JSON-match probe (Pinot's JSON_MATCH over a json_index): a
-    # (column, path, canonical-value) triple from the `json_match` read
-    # option, or None. Postings when indexed, parse-and-probe otherwise.
-    json_match: "tuple[str, str, str] | None" = None
-    # MV containment probe (Pinot's MV inverted index): a (column, value)
-    # pair from the `mv_contains` read option, or None. Answered from the
-    # column's inverted bitmaps (bitmap i = docs whose array CONTAINS
-    # dictionary value i) when present, by decode-and-membership-test
-    # otherwise.
-    mv_contains: "tuple[str, str] | None" = None
-    # Top-k head pushdown for sorted tables: a (column, k) pair from the
-    # `head` read option, or None. Planning prunes segments that provably
-    # sit entirely past the first k rows (manifest min/max/docs); each
-    # surviving sorted segment decodes only its first k rows extended
-    # through the trailing tie group, so a Spark-side
-    # orderBy(col, ...).limit(k) stays exact. Unsorted segments decode
-    # fully (correct, just unaccelerated).
-    head: "tuple[str, int] | None" = None
-    # Mirror-image `tail` option for the LAST k rows — the canonical
-    # "latest N events" Pinot query: orderBy(col DESC, ...).limit(k).
-    tail: "tuple[str, int] | None" = None
     # CDC stream tag ('insert' / 'delete') when the partition belongs to a
-    # changed-data micro-batch; None for every batch-read partition. Kept
-    # LAST so existing positional constructions stay valid.
+    # changed-data micro-batch; None for every other partition.
     change_tag: "str | None" = None
+
+
+def _groups(items: list, n: int) -> list:
+    """Consecutive groups of n."""
+    return [items[i : i + n] for i in range(0, len(items), n)]
 
 
 class PinotDataSource(DataSource):
@@ -276,90 +308,9 @@ class PinotDataSource(DataSource):
         segments = self._segments()
         first = segments[0]
         md = SegmentMetadata.from_file(os.path.join(first, "metadata.properties"))
-        dcol = self.options.get("dictionary_only")
-        if dcol:
-            # dictionary scan (r8): rows are the column's DICTIONARY
-            # entries, one batch per segment — the distinct-value stream
-            # of a dict-encoded column without any forward-index decode
-            # (operators/segment_distinct.py::dictionary_union_distinct).
-            cm = md.columns.get(dcol)
-            if cm is None:
-                raise ValueError(f"dictionary_only column not in segment: {dcol}")
-            if not cm.is_single_value or cm.data_type.value not in (
-                "INT", "LONG", "FLOAT", "DOUBLE", "STRING"
-            ):
-                raise ValueError(
-                    "dictionary_only supports single-value "
-                    f"INT/LONG/FLOAT/DOUBLE/STRING columns: {dcol}"
-                )
-            return StructType(
-                [StructField(dcol, _SPARK_TYPES[cm.data_type.value], False)]
-            )
-        vcol = self.options.get("value_counts")
-        if vcol:
-            # dictionary group-by scan (r8): rows are (distinct value(s),
-            # row count) per segment — Pinot's dictionary-based GROUP BY
-            # optimization; counts come from inverted-index bitmap
-            # popcounts / a forward-id bincount (single column) or one
-            # np.unique over the mixed-radix combined dict-id (composite
-            # key), never a per-row value decode
-            # (SegmentReader.dict_value_counts / dict_value_counts_multi).
-            fields = []
-            for name in [c.strip() for c in vcol.split(",") if c.strip()]:
-                cm = md.columns.get(name)
-                if cm is None:
-                    raise ValueError(
-                        f"value_counts column not in segment: {name}"
-                    )
-                if not cm.is_single_value or cm.data_type.value not in (
-                    "INT", "LONG", "FLOAT", "DOUBLE", "STRING"
-                ):
-                    raise ValueError(
-                        "value_counts supports single-value "
-                        f"INT/LONG/FLOAT/DOUBLE/STRING columns: {name}"
-                    )
-                fields.append(
-                    StructField(name, _SPARK_TYPES[cm.data_type.value], False)
-                )
-            fields.append(StructField("cnt", LongType(), False))
-            return StructType(fields)
-        if self._segment_stats_enabled():
-            # segment-stats system table (r12): one row per SEGMENT with
-            # its metadata-level stats — Pinot's segment-metadata endpoint
-            # (GET /segments/{table}/{segment}/metadata) surfaced as a
-            # queryable relation, the observability view operators use to
-            # reason about layout (segment sizes, zone-map spans) without
-            # decoding any data. Rows come from the table manifest when
-            # fresh (O(1) planning + O(segments) metadata reads, zero
-            # column decodes); stats_column adds that column's zone-map
-            # min/max (single-value INT/LONG only — exact BIGINT output).
-            fields = [
-                StructField("segment", StringType(), False),
-                StructField("n_rows", LongType(), False),
-                StructField("n_columns", LongType(), False),
-            ]
-            scol = self.options.get("stats_column")
-            if scol:
-                cm = md.columns.get(scol)
-                if cm is None:
-                    raise ValueError(
-                        f"stats_column not in segment: {scol}"
-                    )
-                if not cm.is_single_value or cm.data_type.value not in (
-                    "INT",
-                    "LONG",
-                ):
-                    raise ValueError(
-                        "stats_column supports single-value INT/LONG "
-                        f"columns: {scol}"
-                    )
-                fields.append(
-                    StructField(f"min_{scol}", LongType(), True)
-                )
-                fields.append(
-                    StructField(f"max_{scol}", LongType(), True)
-                )
-            return StructType(fields)
+        modes = self._metadata_modes()
+        if modes:
+            return PinotMetadataReader.output_schema(md, *modes[0])
         names = md.column_names()
         if "columns" in self.options:
             requested = [c.strip() for c in self.options["columns"].split(",") if c.strip()]
@@ -390,25 +341,33 @@ class PinotDataSource(DataSource):
             # nullability was wrong: a null-bearing later segment under a
             # non-nullable table schema NPEs inside Spark codegen.
             fields.append(StructField(n, typ, nullable=n in nullable_cols))
-        if self._cdc_enabled():
+        if self._flag("cdc"):
             # CDC stream schema: the table's columns plus the change tag
             fields.append(
                 StructField("_change_type", StringType(), nullable=False)
             )
         return StructType(fields)
 
-    def _cdc_enabled(self) -> bool:
-        return (self.options.get("cdc") or "").lower() in ("true", "1", "yes")
+    def _flag(self, name: str) -> bool:
+        return (self.options.get(name) or "").lower() in ("true", "1", "yes")
 
-    def _segment_stats_enabled(self) -> bool:
-        return (self.options.get("segment_stats") or "").lower() in (
-            "true",
-            "1",
-            "yes",
-        )
+    def _metadata_modes(self) -> list:
+        """(mode, argument) for each metadata-only scan the options ask
+        for: ``dictionary_only`` and ``value_counts`` carry their column
+        list, ``segment_stats`` its optional ``stats_column``."""
+        modes = [
+            (m, self.options[m])
+            for m in ("dictionary_only", "value_counts")
+            if self.options.get(m)
+        ]
+        if self._flag("segment_stats"):
+            modes.append(
+                ("segment_stats", self.options.get("stats_column") or None)
+            )
+        return modes
 
     def reader(self, schema: StructType) -> "PinotDataSourceReader":
-        if self._cdc_enabled():
+        if self._flag("cdc"):
             raise ValueError(
                 "cdc reads are streaming-only: use "
                 "spark.readStream.format('pinot').option('cdc', 'true'); "
@@ -416,20 +375,14 @@ class PinotDataSource(DataSource):
                 "maintenance.changes_between"
             )
         raw = self.options.get("segments_per_partition", "1") or "1"
-        dict_only = self.options.get("dictionary_only") or None
-        value_counts = self.options.get("value_counts") or None
-        if self.options.get("stats_column") and not self._segment_stats_enabled():
+        if self.options.get("stats_column") and not self._flag("segment_stats"):
             # Without this a misspelled/false-valued segment_stats option
             # silently degrades to a full data scan with no min/max columns.
             raise ValueError(
                 "stats_column requires segment_stats=true"
             )
-        seg_stats = (
-            (self.options.get("stats_column") or "")
-            if self._segment_stats_enabled()
-            else None
-        )
-        if sum(x is not None for x in (dict_only, value_counts, seg_stats)) > 1:
+        modes = self._metadata_modes()
+        if len(modes) > 1:
             raise ValueError(
                 "dictionary_only, value_counts and segment_stats are "
                 "mutually exclusive"
@@ -442,18 +395,20 @@ class PinotDataSource(DataSource):
                 raise ValueError(
                     "segments_per_partition must be >= 1 or 'auto'"
                 )
+        probes = tuple(
+            p
+            for p in (
+                self._text_match_option(),
+                self._json_match_option(),
+                self._mv_contains_option(),
+            )
+            if p is not None
+        )
+        head, tail = self._head_option("head"), self._head_option("tail")
+        if modes:
+            return PinotMetadataReader(schema, self._segments(), spp, *modes[0])
         return PinotDataSourceReader(
-            schema,
-            self._segments(),
-            spp,
-            self._text_match_option(),
-            self._json_match_option(),
-            self._mv_contains_option(),
-            self._head_option("head"),
-            self._head_option("tail"),
-            dict_only,
-            value_counts,
-            seg_stats,
+            schema, self._segments(), spp, probes, head=head, tail=tail
         )
 
     def _head_option(self, which: str = "head"):
@@ -472,7 +427,7 @@ class PinotDataSource(DataSource):
         return (col.strip(), k)
 
     def _mv_contains_option(self):
-        """Parse `mv_contains` = "col:value" into (col, value); the value
+        """Parse `mv_contains` = "col:value" into its probe; the value
         stays a string here and is cast to the column's storage type at
         read time (the segment knows its own dtype)."""
         opt = self.options.get("mv_contains")
@@ -481,13 +436,13 @@ class PinotDataSource(DataSource):
         col, sep, value = opt.partition(":")
         if not sep or not col.strip() or not value:
             raise ValueError("mv_contains must look like 'column:value'")
-        return (col.strip(), value)
+        return ("mv_contains", col.strip(), value)
 
     def _json_match_option(self):
-        """Parse `json_match` = "col:$.path=value" into (col, path, value);
-        the value side is the canonical string of json_index.py (e.g. an
-        integer probe is just its digits, a string probe its verbatim
-        text)."""
+        """Parse `json_match` = "col:$.path=value" into its (path, value)
+        probe; the value side is the canonical string of json_index.py
+        (e.g. an integer probe is just its digits, a string probe its
+        verbatim text)."""
         opt = self.options.get("json_match")
         if not opt:
             return None
@@ -497,13 +452,13 @@ class PinotDataSource(DataSource):
             raise ValueError(
                 "json_match must look like 'column:$.path=value'"
             )
-        return (col.strip(), path.strip(), value)
+        return ("json_match", col.strip(), (path.strip(), value))
 
     def _text_match_option(self):
         """Parse `text_match` = "col:term [term ...]" (plus `text_match_mode`
-        = all|any, default all) into the partition triple, analyzing the
-        probe string with the INDEX's analyzer so e.g. "Spark-SQL" probes
-        the tokens the writer actually indexed."""
+        = all|any, default all) into its (terms, require_all) probe,
+        analyzing the probe string with the INDEX's analyzer so e.g.
+        "Spark-SQL" probes the tokens the writer actually indexed."""
         opt = self.options.get("text_match")
         if not opt:
             return None
@@ -520,7 +475,7 @@ class PinotDataSource(DataSource):
         mode = (self.options.get("text_match_mode") or "all").lower()
         if mode not in ("all", "any"):
             raise ValueError("text_match_mode must be 'all' or 'any'")
-        return (col.strip(), terms, mode == "all")
+        return ("text_match", col.strip(), (terms, mode == "all"))
 
     def streamReader(self, schema: StructType) -> "PinotStreamReader":
         path = self.options.get("path")
@@ -529,7 +484,7 @@ class PinotDataSource(DataSource):
         spp = int(self.options.get("segments_per_partition", "1") or "1")
         if spp < 1:
             raise ValueError("segments_per_partition must be >= 1")
-        if self._cdc_enabled():
+        if self._flag("cdc"):
             initial = (
                 self.options.get("initial_snapshot") or "earliest"
             ).lower()
@@ -554,12 +509,12 @@ class PinotDataSource(DataSource):
             return PinotCdcStreamReader(schema, path, spp, initial)
         return PinotStreamReader(schema, path, spp)
 
-    def _column_set_option(self, name: str) -> set:
-        return {
+    def _column_set_option(self, name: str) -> frozenset:
+        return frozenset(
             c.strip()
             for c in self.options.get(name, "").split(",")
             if c.strip()
-        }
+        )
 
     def _partition_option(self) -> "tuple[str, int] | None":
         """(partitionColumn, numPartitions) from the sink options, or None.
@@ -580,6 +535,16 @@ class PinotDataSource(DataSource):
             )
         return (col.strip(), num)
 
+    def _index_options(self) -> "IndexOptions":
+        return IndexOptions(
+            self._column_set_option("inverted"),
+            self._column_set_option("bloom"),
+            self._partition_option(),
+            self._column_set_option("text_index"),
+            self._column_set_option("range_index"),
+            self._column_set_option("json_index"),
+        )
+
     def writer(self, schema: StructType, overwrite: bool) -> "PinotDataSourceWriter":
         path = self.options.get("path")
         if not path:
@@ -591,12 +556,7 @@ class PinotDataSource(DataSource):
             table,
             self._column_set_option("raw"),
             overwrite,
-            self._column_set_option("inverted"),
-            self._column_set_option("bloom"),
-            self._partition_option(),
-            self._column_set_option("text_index"),
-            self._column_set_option("range_index"),
-            self._column_set_option("json_index"),
+            self._index_options(),
         )
 
     def streamWriter(
@@ -611,12 +571,7 @@ class PinotDataSource(DataSource):
             path,
             table,
             self._column_set_option("raw"),
-            self._column_set_option("inverted"),
-            self._column_set_option("bloom"),
-            self._partition_option(),
-            self._column_set_option("text_index"),
-            self._column_set_option("range_index"),
-            self._column_set_option("json_index"),
+            self._index_options(),
         )
 
 
@@ -627,6 +582,13 @@ _RANGE_FILTERS = (EqualTo, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOr
 # O(docs) — then broadcast to docs through the id stream (Pinot evaluates
 # dictionary-encoded predicates the same way).
 _STRING_FILTERS = (StringStartsWith, StringEndsWith, StringContains)
+# each string filter's SegmentReader.string_predicate_mask kind, and the
+# exact per-value test for RAW columns
+_STRING_TESTS = {
+    StringStartsWith: ("startswith", str.startswith),
+    StringEndsWith: ("endswith", str.endswith),
+    StringContains: ("contains", str.__contains__),
+}
 
 
 class PinotDataSourceReader(DataSourceReader):
@@ -635,47 +597,20 @@ class PinotDataSourceReader(DataSourceReader):
         schema: StructType,
         segments: list[str],
         segments_per_partition: int = 1,
-        text_match: "tuple[str, tuple[str, ...], bool] | None" = None,
-        json_match: "tuple[str, str, str] | None" = None,
-        mv_contains: "tuple[str, str] | None" = None,
+        probes: tuple = (),
         head: "tuple[str, int] | None" = None,
         tail: "tuple[str, int] | None" = None,
-        dict_only: "str | None" = None,
-        value_counts: "str | None" = None,
-        segment_stats: "str | None" = None,
     ) -> None:
         self._schema = schema
-        self._columns = tuple(f.name for f in schema.fields)
-        self._ctypes = tuple(f.dataType.simpleString() for f in schema.fields)
         self._segments = segments
         self._spp = segments_per_partition
-        self._text_match = text_match
-        self._json_match = json_match
-        self._mv_contains = mv_contains
-        self._head = head
-        self._tail = tail
-        self._dict_only = dict_only
-        self._value_counts = value_counts
-        # "" = stats without a column's min/max; "<col>" = with; None = off
-        self._segment_stats = segment_stats
-        self._pushed: list[Filter] = []
+        self._spec = ScanSpec.of(
+            schema.fields, probes=probes, head=head, tail=tail
+        )
 
     # -- filter pushdown (rebuild improvement over table.rs:163) ------------
 
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
-        if (
-            self._dict_only
-            or self._value_counts
-            or self._segment_stats is not None
-        ):
-            # dictionary/value-count/segment-stats scan: predicates apply
-            # to dictionary ENTRIES (or per-value count / per-segment
-            # stats rows), not docs — zone maps / sorted ranges / doc
-            # bitmaps are all doc-space machinery, so nothing pushes;
-            # Spark filters the (tiny) entry stream above the scan
-            self._pushed = []
-            yield from filters
-            return
         # TIMESTAMP filters are pushed by converting the datetime.datetime
         # operands Spark hands over into the stored epoch-millis domain
         # (_convert_ts_filter — exact, including sub-millisecond bounds), so
@@ -687,17 +622,17 @@ class PinotDataSourceReader(DataSourceReader):
             for f in self._schema.fields
             if isinstance(f.dataType, TimestampType)
         }
-        # Reset rather than append: defensive against reader-instance reuse
-        # across queries. NOTE an upstream hazard this cannot fix: Spark
-        # caches the computed (partitions, read function) per DataFrame
-        # object and only re-runs this pushdown worker when the new query
-        # HAS filters — so on the SAME df object, an unfiltered action
-        # after a filtered one can replay the filtered scan
-        # (df.filter(..).count(); df.count() -> filtered count). Every
-        # helper in this repo builds a fresh load() per logical query;
-        # interactive users should too (tests/test_datasource.py pins the
-        # working pattern).
-        self._pushed = []
+        # Replace rather than extend the spec's filters: defensive against
+        # reader-instance reuse across queries. NOTE an upstream hazard
+        # this cannot fix: Spark 4.1 caches one scan plan (the pickled
+        # reader and its partitions — PythonDataSourceV2.readInfo) per
+        # load() and re-runs this pushdown only for a query that HAS
+        # filters to push. So on the SAME DataFrame, and through every
+        # temp view over one load() (PinotCatalog.register_all, CREATE
+        # TEMPORARY VIEW ... USING pinot), an unfiltered query after a
+        # filtered one replays the filtered scan. Only a fresh load() per
+        # query is safe; tests/test_reused_scan.py pins the defect.
+        pushed = []
         string_cols = {
             f.name
             for f in self._schema.fields
@@ -766,9 +701,10 @@ class PinotDataSourceReader(DataSourceReader):
                 if conv is None:
                     yield f0  # non-datetime operand: not convertible
                 else:
-                    self._pushed.append(conv)
+                    pushed.append(conv)
             else:
-                self._pushed.append(f)
+                pushed.append(f)
+        self._spec = replace(self._spec, filters=tuple(pushed))
 
     # -- planning -----------------------------------------------------------
 
@@ -801,403 +737,432 @@ class PinotDataSourceReader(DataSourceReader):
 
     def partitions(self) -> list[PinotInputPartition]:
         # Zone-map prune first (per segment — pruning granularity is
-        # unaffected by packing), then pack `segments_per_partition` pruned
-        # survivors into each task. Stats come from the table-level
+        # unaffected by packing), then the head/tail cuts, then pack the
+        # survivors into tasks. Stats come from the table-level
         # segment_stats.json manifest when fresh — ONE file read per table
         # dir instead of a SegmentReader.open per segment, which is the
         # difference between O(1) and O(segments) driver-side planning at
         # 10^5-segment scale; segments the manifest doesn't cover fall back
         # to the per-segment open.
-        if self._segment_stats is not None:
-            # segment-stats system table: metadata-only, one row per
-            # segment — a single task covers the whole table (the work is
-            # one manifest read + at worst one metadata parse per
-            # uncovered segment; no column decode anywhere)
-            return [
-                PinotInputPartition(
-                    tuple(self._segments), self._columns, (),
-                    self._ctypes, None, None, None, None, None,
-                )
-            ]
+        spec = self._spec
         stats = None
-        if (
-            self._pushed
-            or self._spp == 0
-            or self._head is not None
-            or self._tail is not None
-        ):
+        if spec.filters or spec.cuts() or self._spp == 0:
             from pinot_segment.manifest import stats_for_segments
 
             stats = stats_for_segments(self._segments)
-        if self._pushed:
-            survivors = [
-                seg
-                for seg in self._segments
-                if not _segment_can_be_skipped(seg, self._pushed, stats.get(seg))
-            ]
-        else:
-            survivors = list(self._segments)
-        # head composes ONLY with a predicate-free top-k: "first k physical
-        # rows" is not "first k rows of a filtered result", so any pushed
-        # filter or probe disables the pushdown (correct, unaccelerated)
-        probes_clear = (
-            not self._pushed
-            and self._text_match is None
-            and self._json_match is None
-            and self._mv_contains is None
-        )
-        head = self._head if probes_clear else None
-        tail = self._tail if probes_clear else None
-        if head is not None and survivors:
-            survivors = _head_prune(survivors, stats, head)
-        if tail is not None and survivors:
-            survivors = _head_prune(survivors, stats, tail, reverse=True)
-        if not survivors:
-            # All segments zone-map-pruned. Spark still schedules one task for
-            # an empty partitions list (passing None), so hand it a sentinel.
-            return [
-                PinotInputPartition(
-                    (), self._columns, (), self._ctypes,
-                    self._text_match, self._json_match, self._mv_contains,
-                    head, tail,
-                )
-            ]
-        pushed = tuple(self._pushed)
+        survivors = [
+            seg
+            for seg in self._segments
+            if not (
+                spec.filters
+                and _segment_can_be_skipped(seg, spec.filters, stats.get(seg))
+            )
+        ]
+        for cut, reverse in spec.cuts():
+            survivors = _head_prune(survivors, stats, cut, reverse)
+        # All segments pruned: Spark still schedules one task for an empty
+        # partitions list (passing None), so hand it an empty sentinel.
+        groups = self._segment_groups(survivors, stats) or [[]]
+        return [PinotInputPartition(tuple(g)) for g in groups]
+
+    def _segment_groups(self, survivors: list, stats) -> list:
+        """The tasks' segment groups, by one of three packing rules."""
         if self._spp == 0:
             # auto: greedy doc-count packing from manifest stats, so a
             # frequent-small-ingest table (10^5 tiny segments at 100 TB
             # scale) doesn't schedule 10^5 tasks. Segments the manifest
             # doesn't cover count as a full target each (conservative: they
             # stay one-per-task rather than over-packing unknown sizes).
-            parts: list[PinotInputPartition] = []
-            bucket: list[str] = []
+            target = self._AUTO_DOCS_PER_TASK
+            groups: list = []
             docs = 0
             for seg in survivors:
-                st = stats.get(seg)
-                seg_docs = (
-                    st["total_docs"]
-                    if st and "total_docs" in st
-                    else self._AUTO_DOCS_PER_TASK
-                )
-                if bucket and docs + seg_docs > self._AUTO_DOCS_PER_TASK:
-                    parts.append(
-                        PinotInputPartition(
-                            tuple(bucket), self._columns, pushed,
-                            self._ctypes, self._text_match, self._json_match,
-                            self._mv_contains, head, tail,
-                        )
-                    )
-                    bucket, docs = [], 0
-                bucket.append(seg)
+                seg_docs = (stats.get(seg) or {}).get("total_docs", target)
+                if not groups or docs + seg_docs > target:
+                    groups.append([])
+                    docs = 0
+                groups[-1].append(seg)
                 docs += seg_docs
-            if bucket:
-                parts.append(
-                    PinotInputPartition(
-                        tuple(bucket), self._columns, pushed,
-                        self._ctypes, self._text_match, self._json_match,
-                        self._mv_contains, head, tail,
-                    )
-                )
-            return parts
+            return groups
         spp = self._spp
-        if (
-            not self._columns
-            and not self._pushed
-            and self._text_match is None
-            and self._json_match is None
-            and self._mv_contains is None
-            and self._head is None
-            and self._tail is None
-            and spp == 1
-        ):
+        if spp == 1 and self._spec.counts_only():
             spp = max(
                 self._COUNT_PACK,
                 -(-len(survivors) // self._COUNT_TASKS_TARGET),
             )
-        return [
-            PinotInputPartition(
-                tuple(survivors[i : i + spp]),
-                self._columns,
-                pushed,
-                self._ctypes,
-                self._text_match,
-                self._json_match,
-                self._mv_contains,
-                head,
-                tail,
-            )
-            for i in range(0, len(survivors), spp)
-        ]
+        return _groups(survivors, spp)
 
     # -- execution (runs on executors) --------------------------------------
 
     def read(self, partition: PinotInputPartition) -> Iterator["pa.RecordBatch"]:
-        import pyarrow as pa
+        return _read_partition(self._spec, partition)
 
-        from pinot_segment import SegmentReader
 
+class PinotMetadataReader(PinotDataSourceReader):
+    """The metadata-only scans: rows come from segment metadata,
+    dictionaries and index popcounts, never from a per-row value decode.
+
+    - ``dictionary_only`` (r8): the column's DICTIONARY entries, one batch
+      per segment — the distinct-value stream of a dict-encoded column
+      (operators/segment_distinct.py::dictionary_union_distinct).
+    - ``value_counts`` (r8): (distinct value(s), row count) per segment —
+      Pinot's dictionary-based GROUP BY optimization; counts come from
+      inverted-index bitmap popcounts / a forward-id bincount (single
+      column) or one np.unique over the mixed-radix combined dict-id
+      (composite key) (SegmentReader.dict_value_counts /
+      dict_value_counts_multi).
+    - ``segment_stats`` (r12): one row per SEGMENT with its metadata-level
+      stats — Pinot's segment-metadata endpoint
+      (GET /segments/{table}/{segment}/metadata) surfaced as a queryable
+      relation, the observability view operators use to reason about
+      layout (segment sizes, zone-map spans) without decoding any data.
+      Rows come from the table manifest when fresh (zero column decodes);
+      ``stats_column`` adds that column's zone-map min/max (single-value
+      INT/LONG only — exact BIGINT output).
+
+    Predicates apply to dictionary entries, per-value counts or
+    per-segment rows, not docs — zone maps, sorted ranges and doc bitmaps
+    are all doc-space machinery — so nothing pushes and Spark filters the
+    (tiny) row stream above the scan. Planning packs segments the way an
+    unfiltered data scan does; the segment-stats table is one task."""
+
+    def __init__(
+        self,
+        schema: StructType,
+        segments: list[str],
+        segments_per_partition: int,
+        mode: str,
+        arg: "str | None",
+    ) -> None:
+        super().__init__(schema, segments, segments_per_partition)
+        self._mode = mode
+        self._arg = arg
+
+    @staticmethod
+    def output_schema(md, mode: str, arg: "str | None") -> StructType:
+        """The relation a metadata-only scan returns, validated against
+        the first segment's metadata."""
+        if mode == "segment_stats":
+            fields = [
+                StructField("segment", StringType(), False),
+                StructField("n_rows", LongType(), False),
+                StructField("n_columns", LongType(), False),
+            ]
+            if arg:
+                cm = md.columns.get(arg)
+                if cm is None:
+                    raise ValueError(f"stats_column not in segment: {arg}")
+                if not cm.is_single_value or cm.data_type.value not in (
+                    "INT",
+                    "LONG",
+                ):
+                    raise ValueError(
+                        "stats_column supports single-value INT/LONG "
+                        f"columns: {arg}"
+                    )
+                fields.append(StructField(f"min_{arg}", LongType(), True))
+                fields.append(StructField(f"max_{arg}", LongType(), True))
+            return StructType(fields)
+        names = (
+            [arg]
+            if mode == "dictionary_only"
+            else [c.strip() for c in arg.split(",") if c.strip()]
+        )
+        fields = []
+        for name in names:
+            cm = md.columns.get(name)
+            if cm is None:
+                raise ValueError(f"{mode} column not in segment: {name}")
+            if not cm.is_single_value or cm.data_type.value not in (
+                "INT", "LONG", "FLOAT", "DOUBLE", "STRING"
+            ):
+                raise ValueError(
+                    f"{mode} supports single-value "
+                    f"INT/LONG/FLOAT/DOUBLE/STRING columns: {name}"
+                )
+            fields.append(
+                StructField(name, _SPARK_TYPES[cm.data_type.value], False)
+            )
+        if mode == "value_counts":
+            fields.append(StructField("cnt", LongType(), False))
+        return StructType(fields)
+
+    def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
+        yield from filters
+
+    def partitions(self) -> list[PinotInputPartition]:
+        if self._mode == "segment_stats":
+            # one task: a manifest read plus at worst one metadata parse
+            # per uncovered segment
+            return [PinotInputPartition(tuple(self._segments))]
+        return super().partitions()
+
+    def read(self, partition: PinotInputPartition) -> Iterator["pa.RecordBatch"]:
         if partition is None:
             return
-        if self._segment_stats is not None:
-            from pinot_segment.manifest import (
-                collect_segment_stats,
-                stats_for_segments,
-            )
+        rows = {
+            "dictionary_only": self._dictionary_rows,
+            "value_counts": self._value_count_rows,
+            "segment_stats": self._segment_stat_rows,
+        }[self._mode]
+        yield from rows(partition.segment_dirs)
 
-            scol = self._segment_stats or None
-            manifest = stats_for_segments(list(partition.segment_dirs))
-            names, n_rows, n_cols, mins, maxs = [], [], [], [], []
-            for v3 in partition.segment_dirs:
-                st = manifest.get(v3)
-                if st is None:
-                    # no fresh manifest: open THIS segment's metadata
-                    # (the per-segment fallback, never a data decode)
-                    st = collect_segment_stats(v3)
-                seg_dir = os.path.dirname(v3)
-                names.append(os.path.basename(seg_dir))
-                n_rows.append(int(st["total_docs"]))
-                n_cols.append(len(st["columns"]))
-                if scol:
-                    entry = st["columns"].get(scol) or {}
-                    mn, mx = entry.get("min"), entry.get("max")
-                    mins.append(None if mn is None else int(mn))
-                    maxs.append(None if mx is None else int(mx))
-            arrays = [
-                pa.array(names, pa.string()),
-                pa.array(n_rows, pa.int64()),
-                pa.array(n_cols, pa.int64()),
-            ]
+    def _segment_stat_rows(self, segment_dirs) -> Iterator["pa.RecordBatch"]:
+        import pyarrow as pa
+
+        from pinot_segment.manifest import (
+            collect_segment_stats,
+            stats_for_segments,
+        )
+
+        scol = self._arg
+        manifest = stats_for_segments(list(segment_dirs))
+        names, n_rows, n_cols, mins, maxs = [], [], [], [], []
+        for v3 in segment_dirs:
+            st = manifest.get(v3)
+            if st is None:
+                # no fresh manifest: open THIS segment's metadata
+                # (the per-segment fallback, never a data decode)
+                st = collect_segment_stats(v3)
+            seg_dir = os.path.dirname(v3)
+            names.append(os.path.basename(seg_dir))
+            n_rows.append(int(st["total_docs"]))
+            n_cols.append(len(st["columns"]))
             if scol:
-                arrays.append(pa.array(mins, pa.int64()))
-                arrays.append(pa.array(maxs, pa.int64()))
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=list(self._columns)
-            )
-            return
-        if self._dict_only:
-            col = self._dict_only
-            for segment_dir in partition.segment_dirs:
-                r = _open_segment(segment_dir)
-                cm = r.metadata.columns.get(col)
-                if cm is None:
-                    # schema evolution: a pre-column segment reads as
-                    # all-NULL — it contributes no dictionary entries
-                    continue
-                if cm.has_null_values:
-                    raise ValueError(
-                        f"dictionary_only on nullable column {col}: the "
-                        "dictionary contains the NULL fill entry and "
-                        "cannot stand in for the distinct value set"
-                    )
-                vals = r.dictionary_values(col)
-                if vals is None:
-                    raise ValueError(
-                        f"dictionary_only: {col} is not dict-encoded in "
-                        f"{segment_dir}"
-                    )
-                if len(vals):
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array(vals)], names=[col]
-                    )
-            return
-        if self._value_counts:
-            names = [c.strip() for c in self._value_counts.split(",") if c.strip()]
-            for segment_dir in partition.segment_dirs:
-                r = _open_segment(segment_dir)
-                missing = [c for c in names if r.metadata.columns.get(c) is None]
-                if missing:
-                    # schema evolution: a pre-column segment holds only NULL
-                    # rows for the column. SQL GROUP BY would emit a
-                    # NULL-keyed group here, which dictionary counts cannot
-                    # represent — silently skipping the segment would return
-                    # incomplete counts, so refuse (the same contract as the
-                    # nullable check below; dictionary_groupby_count's
-                    # precondition gate rejects such tables before planning).
-                    raise ValueError(
-                        f"value_counts: {missing} absent from segment "
-                        f"{segment_dir} (pre-schema-evolution rows would be "
-                        "silently dropped); value_counts requires the "
-                        "column(s) present, dict-encoded and null-free in "
-                        "every segment"
-                    )
-                if len(names) == 1:
-                    got = r.dict_value_counts(names[0])
-                    if got is not None:
-                        got = ([got[0]], got[1])
-                else:
-                    got = r.dict_value_counts_multi(names)
-                if got is None:
-                    raise ValueError(
-                        f"value_counts needs {names} dict-encoded and "
-                        f"null-free in every segment: {segment_dir}"
-                    )
-                value_arrays, counts = got
-                if len(counts):
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array(v) for v in value_arrays]
-                        + [pa.array(counts)],
-                        names=names + ["cnt"],
-                    )
-            return
-        if (
-            not partition.columns
-            and not partition.filters
-            and partition.text_match is None
-            and partition.json_match is None
-            and partition.mv_contains is None
-            and partition.head is None
-            and partition.tail is None
-        ):
-            # Unfiltered metadata-only COUNT(*): parse metadata.properties
-            # alone (no index_map / columns.psf open — the reference's
-            # exec.rs:92-95 metadata count). Zero-column nonzero-row batches
-            # are valid Arrow and Spark counts them.
-            from pinot_segment import SegmentMetadata
-            from pinot_segment.manifest import stats_for_segments
+                entry = st["columns"].get(scol) or {}
+                mn, mx = entry.get("min"), entry.get("max")
+                mins.append(None if mn is None else int(mn))
+                maxs.append(None if mx is None else int(mx))
+        arrays = [
+            pa.array(names, pa.string()),
+            pa.array(n_rows, pa.int64()),
+            pa.array(n_cols, pa.int64()),
+        ]
+        if scol:
+            arrays.append(pa.array(mins, pa.int64()))
+            arrays.append(pa.array(maxs, pa.int64()))
+        yield pa.RecordBatch.from_arrays(
+            arrays, names=list(self._spec.columns)
+        )
 
-            # Manifest-first (r12 verdict #3, count_star headroom): ONE
-            # table-level stats read covers every fresh segment in the
-            # task, so a 64-segment count task does one JSON read instead
-            # of 64 properties parses; stale/uncovered segments fall back
-            # to their own metadata.properties. Verification is scoped to
-            # the task's OWN segments (r13 advice — stats_for_segments
-            # fingerprints only what it serves), so a worker on a
-            # 1M-segment table pays ~31k stat+md5 per task, not 1M.
-            manifest = stats_for_segments(list(partition.segment_dirs))
-            for segment_dir in partition.segment_dirs:
-                st = manifest.get(segment_dir)
-                if st is not None:
-                    n = int(st["total_docs"])
-                else:
-                    n = SegmentMetadata.from_file(
-                        os.path.join(segment_dir, "metadata.properties")
-                    ).total_docs
-                if n > 0:
-                    yield pa.RecordBatch.from_struct_array(
-                        pa.nulls(n, pa.struct([]))
-                    )
-            return
-        for segment_dir in partition.segment_dirs:
-            reader = _open_segment(segment_dir)
-            # Schema evolution (Pinot's add-column behavior, beyond the
-            # reference): a segment written before a column existed reads
-            # as all-NULL for it. Consequences for pushed filters: any
-            # value predicate (or IS NOT NULL) on a column this segment
-            # lacks matches nothing — skip the segment; IS NULL on it
-            # matches every row — drop the conjunct.
-            present = set(reader.metadata.columns)
-            filters = partition.filters
-            if any(_filter_attr(f) not in present for f in filters):
-                # On an all-NULL (missing) column only IS NULL — or its
-                # double negation NOT(IS NOT NULL) — matches rows; any
-                # other predicate (including NOT of a value predicate,
-                # which 3VL evaluates to NULL on NULL input) matches none.
-                if any(
-                    not _matches_all_nulls(f)
-                    for f in filters
-                    if _filter_attr(f) not in present
-                ):
-                    continue
-                filters = tuple(
-                    f for f in filters if _filter_attr(f) in present
+    def _dictionary_rows(self, segment_dirs) -> Iterator["pa.RecordBatch"]:
+        import pyarrow as pa
+
+        col = self._arg
+        for segment_dir in segment_dirs:
+            r = _open_segment(segment_dir)
+            cm = r.metadata.columns.get(col)
+            if cm is None:
+                # schema evolution: a pre-column segment reads as
+                # all-NULL — it contributes no dictionary entries
+                continue
+            if cm.has_null_values:
+                raise ValueError(
+                    f"dictionary_only on nullable column {col}: the "
+                    "dictionary contains the NULL fill entry and "
+                    "cannot stand in for the distinct value set"
                 )
-            # Bloom-filter pruning (Pinot's bloom_filter index type; beyond
-            # the reference): a pushed equality/IN probe on a bloomed column
-            # can prove the whole segment empty from a ~100 KB filter read —
-            # before any dictionary, forward-index, or inverted-index work.
-            # This is the unclustered-high-card complement to zone maps: at
-            # 100 TB a point lookup on orderkey/user_id touches a handful of
-            # segments instead of decoding every one.
-            if _bloom_says_absent(reader, filters):
-                continue
-            # Sorted-column pruning (Pinot's sorted-index idea): a pushed
-            # range/eq filter on a column the segment declares sorted
-            # binary-searches into a doc range, so only [lo, hi) is ever
-            # decoded; remaining filters mask within the slice.
-            rng = _sorted_row_range(reader, filters)
-            if rng is not None and rng[0] >= rng[1]:
-                continue  # provably empty
-            if partition.head is not None:
-                hr = _head_row_range(reader, partition.head)
-                if hr is not None:
-                    rng = hr if rng is None else (
-                        max(rng[0], hr[0]), min(rng[1], hr[1])
-                    )
-                    if rng[0] >= rng[1]:
-                        continue
-            if partition.tail is not None:
-                tr = _head_row_range(reader, partition.tail, reverse=True)
-                if tr is not None:
-                    rng = tr if rng is None else (
-                        max(rng[0], tr[0]), min(rng[1], tr[1])
-                    )
-                    if rng[0] >= rng[1]:
-                        continue
-            mask = _row_mask(reader, filters, rng)
-            if mask is not None and not mask.any():
-                continue
-            if partition.text_match is not None:
-                # TEXT_MATCH probe: postings bitmap when the segment has a
-                # text index, decode-and-tokenize otherwise — either way a
-                # plain row mask that composes with the pushed filters, so
-                # selection decode (O(matches)) kicks in below unchanged.
-                tm = _text_match_rows(reader, partition.text_match, rng)
-                mask = tm if mask is None else (mask & tm)
-                if not mask.any():
-                    continue
-            if partition.json_match is not None:
-                # JSON_MATCH probe: same composition contract as text_match.
-                jm = _json_match_rows(reader, partition.json_match, rng)
-                mask = jm if mask is None else (mask & jm)
-                if not mask.any():
-                    continue
-            if partition.mv_contains is not None:
-                # MV containment probe: same composition contract.
-                mm = _mv_contains_rows(reader, partition.mv_contains, rng)
-                mask = mm if mask is None else (mask & mm)
-                if not mask.any():
-                    continue
-            if not partition.columns:
-                # Empty projection — COUNT(*) via `.option("columns", "")`.
-                # The row count comes from segment metadata (or the filter
-                # mask sum); no forward index is decoded, matching the
-                # reference's metadata-only count (exec.rs:92-95).
-                # Zero-column nonzero-row batches are valid Arrow and Spark
-                # counts them.
-                if mask is not None:
-                    n = int(mask.sum())
-                elif rng is not None:
-                    n = rng[1] - rng[0]
-                else:
-                    n = reader.total_docs()
-                if n > 0:
-                    yield pa.RecordBatch.from_struct_array(
-                        pa.nulls(n, pa.struct([]))
-                    )
-                continue
-            decode_cols = [c for c in partition.columns if c in present]
-            if mask is not None:
-                # Filter resolved to a row mask (inverted-index bitmap or
-                # residual predicate): decode ONLY the matching docs. Dict
-                # columns fancy-index their id stream before the dictionary
-                # take, so a selective filter (the inverted index's whole
-                # point) pays O(matches) value materialization instead of
-                # decode-everything-then-filter (r5 verdict #2).
-                import numpy as np
+            vals = r.dictionary_values(col)
+            if vals is None:
+                raise ValueError(
+                    f"dictionary_only: {col} is not dict-encoded in "
+                    f"{segment_dir}"
+                )
+            if len(vals):
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(vals)], names=[col]
+                )
 
-                sel = np.flatnonzero(mask)
-                if rng is not None and rng[0]:
-                    sel = sel + rng[0]
-                table = reader.read_columns_arrow(decode_cols, selection=sel)
+    def _value_count_rows(self, segment_dirs) -> Iterator["pa.RecordBatch"]:
+        import pyarrow as pa
+
+        names = [c.strip() for c in self._arg.split(",") if c.strip()]
+        for segment_dir in segment_dirs:
+            r = _open_segment(segment_dir)
+            missing = [c for c in names if r.metadata.columns.get(c) is None]
+            if missing:
+                # schema evolution: a pre-column segment holds only NULL
+                # rows for the column. SQL GROUP BY would emit a
+                # NULL-keyed group here, which dictionary counts cannot
+                # represent — silently skipping the segment would return
+                # incomplete counts, so refuse (the same contract as the
+                # nullable check below; dictionary_groupby_count's
+                # precondition gate rejects such tables before planning).
+                raise ValueError(
+                    f"value_counts: {missing} absent from segment "
+                    f"{segment_dir} (pre-schema-evolution rows would be "
+                    "silently dropped); value_counts requires the "
+                    "column(s) present, dict-encoded and null-free in "
+                    "every segment"
+                )
+            if len(names) == 1:
+                got = r.dict_value_counts(names[0])
+                if got is not None:
+                    got = ([got[0]], got[1])
             else:
-                table = reader.read_columns_arrow(decode_cols, rng)
-            if len(decode_cols) != len(partition.columns):
-                table = _fill_missing_columns(reader, partition, table, rng, mask)
-            # Yield natural column-chunk batches; Spark re-slices to its own
-            # batch size JVM-side, so pre-slicing to 8,192 (the reference's
-            # exec.rs:24 aesthetic) only multiplies per-batch IPC overhead.
-            for batch in table.to_batches():
-                yield batch
+                got = r.dict_value_counts_multi(names)
+            if got is None:
+                raise ValueError(
+                    f"value_counts needs {names} dict-encoded and "
+                    f"null-free in every segment: {segment_dir}"
+                )
+            value_arrays, counts = got
+            if len(counts):
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(v) for v in value_arrays]
+                    + [pa.array(counts)],
+                    names=names + ["cnt"],
+                )
+
+
+# -- the per-segment read pipeline (runs on executors) -----------------------
+
+
+def _read_partition(
+    spec: ScanSpec, partition: "PinotInputPartition | None"
+) -> Iterator["pa.RecordBatch"]:
+    """Every segment of a partition through ``_scan_segment`` (an
+    unfiltered COUNT(*) reads row counts only), emitted as natural Arrow
+    chunks with the CDC change tag appended last when the partition
+    carries one. Spark re-slices to its own batch size JVM-side, so
+    pre-slicing (the reference's 8,192-row exec.rs:24 batches) would only
+    multiply per-batch IPC overhead."""
+    import pyarrow as pa
+
+    if partition is None:
+        return
+    dirs = partition.segment_dirs
+    if spec.counts_only():
+        tables = _count_tables(dirs)
+    else:
+        tables = (_scan_segment(spec, d) for d in dirs)
+    for table in tables:
+        if table is None or not table.num_rows:
+            continue
+        if partition.change_tag is not None:
+            table = table.append_column(
+                pa.field("_change_type", pa.string(), nullable=False),
+                pa.array([partition.change_tag] * table.num_rows, pa.string()),
+            )
+        yield from table.to_batches()
+
+
+def _rows_only(n: int) -> "pa.Table":
+    """A zero-column table of n rows: valid Arrow, and Spark counts it."""
+    import pyarrow as pa
+
+    return pa.Table.from_batches(
+        [pa.RecordBatch.from_struct_array(pa.nulls(n, pa.struct([])))]
+    )
+
+
+def _count_tables(segment_dirs) -> Iterator["pa.Table"]:
+    """Row counts for an unfiltered COUNT(*): no index_map / columns.psf
+    open — the reference's exec.rs:92-95 metadata count. Manifest-first
+    (r12 verdict #3): ONE table-level stats read covers every fresh
+    segment in the task, so a 64-segment count task does one JSON read
+    instead of 64 properties parses; stale/uncovered segments fall back to
+    their own metadata.properties. Verification is scoped to the task's
+    OWN segments (r13 advice — stats_for_segments fingerprints only what
+    it serves), so a worker on a 1M-segment table pays ~31k stat+md5 per
+    task, not 1M."""
+    from pinot_segment import SegmentMetadata
+    from pinot_segment.manifest import stats_for_segments
+
+    manifest = stats_for_segments(list(segment_dirs))
+    for segment_dir in segment_dirs:
+        st = manifest.get(segment_dir)
+        if st is not None:
+            n = int(st["total_docs"])
+        else:
+            n = SegmentMetadata.from_file(
+                os.path.join(segment_dir, "metadata.properties")
+            ).total_docs
+        yield _rows_only(n)
+
+
+def _scan_segment(spec: ScanSpec, segment_dir: str) -> "pa.Table | None":
+    """One segment through the scan pipeline: open → schema-evolution
+    filter rewrite → bloom skip → row range → masks → decode/NULL-fill.
+    None when the segment provably holds no matching row."""
+    import numpy as np
+
+    reader = _open_segment(segment_dir)
+    present = set(reader.metadata.columns)
+    # Schema evolution (Pinot's add-column behavior, beyond the
+    # reference): a segment written before a column existed reads as
+    # all-NULL for it. On such a column only IS NULL — or its double
+    # negation NOT(IS NOT NULL) — matches rows, so that conjunct drops;
+    # any other predicate (including NOT of a value predicate, which 3VL
+    # evaluates to NULL on NULL input) matches none — skip the segment.
+    if not all(
+        _matches_all_nulls(f)
+        for f in spec.filters
+        if _filter_attr(f) not in present
+    ):
+        return None
+    filters = tuple(f for f in spec.filters if _filter_attr(f) in present)
+    # Bloom-filter pruning (Pinot's bloom_filter index type; beyond the
+    # reference): a pushed equality/IN probe on a bloomed column can prove
+    # the whole segment empty from a ~100 KB filter read — before any
+    # dictionary, forward-index, or inverted-index work. This is the
+    # unclustered-high-card complement to zone maps: at 100 TB a point
+    # lookup on orderkey/user_id touches a handful of segments instead of
+    # decoding every one.
+    if _bloom_says_absent(reader, filters):
+        return None
+    # Row range: a pushed range/eq filter on a column the segment declares
+    # sorted binary-searches into a doc range (Pinot's sorted-index idea),
+    # and a head/tail cut on a sorted column keeps only its first/last k
+    # rows; only [lo, hi) is ever decoded, remaining filters mask within
+    # the slice.
+    rng = _sorted_row_range(reader, filters)
+    for cut, reverse in spec.cuts():
+        rng = _intersect(rng, _head_row_range(reader, cut, reverse))
+    if rng is not None and rng[0] >= rng[1]:
+        return None  # provably empty
+    # Pushed filters, then each probe, AND into one row mask; an empty
+    # mask ends the segment before the next probe's work.
+    mask = None
+    for m in chain(
+        (_row_mask(reader, filters, rng),),
+        (_probe_rows(reader, p, rng) for p in spec.probes),
+    ):
+        if m is None:
+            continue
+        mask = m if mask is None else mask & m
+        if not mask.any():
+            return None
+    decode_cols = [c for c in spec.columns if c in present]
+    if not decode_cols:
+        # Empty projection — COUNT(*) via `.option("columns", "")` — or
+        # only columns this segment predates: the row count comes from
+        # segment metadata (or the filter mask); no forward index is
+        # decoded, matching the reference's metadata-only count
+        # (exec.rs:92-95).
+        if mask is not None:
+            n = int(mask.sum())
+        elif rng is not None:
+            n = rng[1] - rng[0]
+        else:
+            n = reader.total_docs()
+        table = _rows_only(n)
+    elif mask is not None:
+        # Filter resolved to a row mask (inverted-index bitmap or residual
+        # predicate): decode ONLY the matching docs. Dict columns
+        # fancy-index their id stream before the dictionary take, so a
+        # selective filter (the inverted index's whole point) pays
+        # O(matches) value materialization instead of
+        # decode-everything-then-filter (r5 verdict #2).
+        sel = np.flatnonzero(mask)
+        if rng is not None and rng[0]:
+            sel = sel + rng[0]
+        table = reader.read_columns_arrow(decode_cols, selection=sel)
+    else:
+        table = reader.read_columns_arrow(decode_cols, rng)
+    if len(decode_cols) != len(spec.columns):
+        table = _fill_missing_columns(spec, table)
+    return table
 
 
 def _arrow_type_from_spark(type_str: str):
@@ -1229,39 +1194,23 @@ def _arrow_type_from_spark(type_str: str):
         ) from None
 
 
-def _fill_missing_columns(reader, partition, table, rng, mask):
+def _fill_missing_columns(spec: ScanSpec, table: "pa.Table") -> "pa.Table":
     """Assemble the full projected Table when the segment lacks some
     columns (schema evolution): decoded columns pass through, missing ones
     become all-NULL arrays of the declared Spark type, in projection
     order."""
     import pyarrow as pa
 
-    if table.num_columns:
-        n = table.num_rows
-    elif mask is not None:
-        n = int(mask.sum())
-    elif rng is not None:
-        n = rng[1] - rng[0]
-    else:
-        n = reader.total_docs()
-    if not partition.column_types:
-        raise ValueError(
-            "segment lacks projected columns and the partition carries no "
-            "column types to synthesize NULLs from"
-        )
-    present = set(reader.metadata.columns)
     arrays, fields = [], []
-    for name, tstr in zip(partition.columns, partition.column_types):
-        if name in present:
-            idx = table.schema.get_field_index(name)
-            fields.append(
-                pa.field(name, table.schema.field(idx).type, nullable=True)
-            )
-            arrays.append(table.column(idx))
+    for name, tstr in zip(spec.columns, spec.column_types, strict=True):
+        if name in table.column_names:
+            col = table.column(name)
+            fields.append(pa.field(name, col.type, nullable=True))
+            arrays.append(col)
         else:
             at = _arrow_type_from_spark(tstr)
             fields.append(pa.field(name, at, nullable=True))
-            arrays.append(pa.chunked_array([pa.nulls(n, at)]))
+            arrays.append(pa.chunked_array([pa.nulls(table.num_rows, at)]))
     return pa.Table.from_arrays(arrays, schema=pa.schema(fields))
 
 
@@ -1272,7 +1221,25 @@ def register_pinot_source(spark) -> None:
 # -- streaming read (beyond parity: reference README.md:419 roadmap item) ----
 
 
-class PinotStreamReader(DataSourceStreamReader):
+class _SegmentStreamReader(DataSourceStreamReader):
+    """A micro-batch of segments read through the batch scan's pipeline:
+    columns and types only — stream reads push no filters and ignore the
+    probe and head/tail options. ``commit`` and ``stop`` keep the API's
+    no-op defaults: landed segments are immutable, and retired-segment
+    reclaim belongs to vacuum, not the stream."""
+
+    def __init__(
+        self, fields, path: str, segments_per_partition: int = 1
+    ) -> None:
+        self._spec = ScanSpec.of(fields)
+        self._path = path
+        self._spp = segments_per_partition
+
+    def read(self, partition: PinotInputPartition) -> Iterator["pa.RecordBatch"]:
+        return _read_partition(self._spec, partition)
+
+
+class PinotStreamReader(_SegmentStreamReader):
     """``spark.readStream.format("pinot")`` — segment-arrival micro-batches.
 
     The reference reads REALTIME segment dirs as static files and lists true
@@ -1308,11 +1275,7 @@ class PinotStreamReader(DataSourceStreamReader):
     def __init__(
         self, schema: StructType, path: str, segments_per_partition: int = 1
     ) -> None:
-        self._schema = schema
-        self._columns = tuple(f.name for f in schema.fields)
-        self._ctypes = tuple(f.dataType.simpleString() for f in schema.fields)
-        self._path = path
-        self._spp = segments_per_partition
+        super().__init__(schema.fields, path, segments_per_partition)
 
     def _current_segments(self) -> list[str]:
         try:
@@ -1416,41 +1379,12 @@ class PinotStreamReader(DataSourceStreamReader):
             dirs.append(v3)
         # Same packing knob as the batch reader: a burst of many tiny
         # segments in one micro-batch otherwise schedules one task each.
-        parts = [
-            PinotInputPartition(tuple(dirs[i : i + self._spp]), self._columns, (), self._ctypes)
-            for i in range(0, len(dirs), self._spp)
-        ]
         # Spark requires ≥1 partition per batch; empty batch → sentinel.
-        return parts or [PinotInputPartition((), self._columns, ())]
-
-    def read(self, partition: PinotInputPartition) -> Iterator["pa.RecordBatch"]:
-        from pinot_segment import SegmentReader
-
-        for segment_dir in partition.segment_dirs:
-            reader = _open_segment(segment_dir)
-            # Schema evolution, same as the batch path: stream with the
-            # evolved schema and pre-column segments surface the new
-            # columns as all-NULL.
-            decode_cols = [
-                c
-                for c in partition.columns
-                if c in reader.metadata.columns
-            ]
-            table = reader.read_columns_arrow(decode_cols)
-            if len(decode_cols) != len(partition.columns):
-                table = _fill_missing_columns(
-                    reader, partition, table, None, None
-                )
-            yield from table.to_batches(max_chunksize=BATCH_ROWS)
-
-    def commit(self, end: dict) -> None:
-        pass  # nothing to clean up; segments are immutable
-
-    def stop(self) -> None:
-        pass
+        groups = _groups(dirs, self._spp) or [[]]
+        return [PinotInputPartition(tuple(g)) for g in groups]
 
 
-class PinotCdcStreamReader(DataSourceStreamReader):
+class PinotCdcStreamReader(_SegmentStreamReader):
     """``spark.readStream.format("pinot").option("cdc", "true")`` — the
     changed-data feed as a stream, with snapshot-log ids as offsets.
 
@@ -1511,15 +1445,11 @@ class PinotCdcStreamReader(DataSourceStreamReader):
         initial: str = "earliest",
     ) -> None:
         # _change_type is synthesized per-partition, never decoded
-        self._data_fields = [
-            f for f in schema.fields if f.name != "_change_type"
-        ]
-        self._columns = tuple(f.name for f in self._data_fields)
-        self._ctypes = tuple(
-            f.dataType.simpleString() for f in self._data_fields
+        super().__init__(
+            [f for f in schema.fields if f.name != "_change_type"],
+            path,
+            segments_per_partition,
         )
-        self._path = path
-        self._spp = segments_per_partition
         self._initial = initial
 
     def _current_id(self) -> int:
@@ -1537,11 +1467,7 @@ class PinotCdcStreamReader(DataSourceStreamReader):
 
     def _empty_batch(self) -> list[PinotInputPartition]:
         # Spark requires >= 1 partition per micro-batch
-        return [
-            PinotInputPartition(
-                (), self._columns, (), self._ctypes, change_tag="insert"
-            )
-        ]
+        return [PinotInputPartition((), "insert")]
 
     def partitions(self, start: dict, end: dict) -> list[PinotInputPartition]:
         from pinot_segment.snapshot import (
@@ -1574,43 +1500,10 @@ class PinotCdcStreamReader(DataSourceStreamReader):
                 self._path, names, f"CDC stream batch {s}->{e}"
             )
             parts.extend(
-                PinotInputPartition(
-                    tuple(dirs[i : i + self._spp]),
-                    self._columns,
-                    (),
-                    self._ctypes,
-                    change_tag=tag,
-                )
-                for i in range(0, len(dirs), self._spp)
+                PinotInputPartition(tuple(g), tag)
+                for g in _groups(dirs, self._spp)
             )
         return parts or self._empty_batch()
-
-    def read(self, partition: PinotInputPartition) -> Iterator["pa.RecordBatch"]:
-        import pyarrow as pa
-
-        for segment_dir in partition.segment_dirs:
-            reader = _open_segment(segment_dir)
-            decode_cols = [
-                c for c in partition.columns if c in reader.metadata.columns
-            ]
-            table = reader.read_columns_arrow(decode_cols)
-            if len(decode_cols) != len(partition.columns):
-                table = _fill_missing_columns(
-                    reader, partition, table, None, None
-                )
-            tag = pa.array(
-                [partition.change_tag] * table.num_rows, pa.string()
-            )
-            table = table.append_column(
-                pa.field("_change_type", pa.string(), nullable=False), tag
-            )
-            yield from table.to_batches(max_chunksize=BATCH_ROWS)
-
-    def commit(self, end: dict) -> None:
-        pass  # retired-segment reclaim belongs to vacuum, not the stream
-
-    def stop(self) -> None:
-        pass
 
 
 # -- write path (beyond parity: reference README.md:418 roadmap item) --------
@@ -1665,12 +1558,7 @@ class PinotStreamWriter(DataSourceStreamArrowWriter):
         path: str,
         table: str,
         raw_columns: set,
-        inverted_columns: set | None = None,
-        bloom_columns: set | None = None,
-        partition_option: "tuple[str, int] | None" = None,
-        text_index_columns: set | None = None,
-        range_index_columns: set | None = None,
-        json_index_columns: set | None = None,
+        indexes: "IndexOptions | None" = None,
     ) -> None:
         # Delegate validation + the per-task write to the batch writer —
         # including the full index-option surface, so a streaming ingest
@@ -1678,9 +1566,7 @@ class PinotStreamWriter(DataSourceStreamArrowWriter):
         # (an ingest path that silently drops indexes is a fleet hazard,
         # same reasoning as compaction's union semantics).
         self._delegate = PinotDataSourceWriter(
-            schema, path, table, raw_columns, False, inverted_columns,
-            bloom_columns, partition_option, text_index_columns,
-            range_index_columns, json_index_columns,
+            schema, path, table, raw_columns, False, indexes
         )
         self._path = path
 
@@ -1688,18 +1574,26 @@ class PinotStreamWriter(DataSourceStreamArrowWriter):
         return self._delegate.write(iterator)
 
     def commit(self, messages, batchId: int) -> None:
-        new_stats = {}
-        for m in messages:
-            if m is None or not m.staged_dir:
-                continue
-            name = f"b{batchId}_{m.segment_name}"
-            os.replace(m.staged_dir, os.path.join(self._path, name))
-            if getattr(m, "stats", None) is not None:
-                new_stats[name] = m.stats
-        _update_manifest_after_commit(self._path, new_stats)
+        _update_manifest_after_commit(
+            self._path, _land_segments(self._path, messages, f"b{batchId}_")
+        )
 
     def abort(self, messages, batchId: int) -> None:
         self._delegate.abort(messages)
+
+
+def _land_segments(path: str, messages, prefix: str = "") -> dict:
+    """Rename each staged segment into the table dir as prefix + its name;
+    returns the write tasks' manifest stats by landed name."""
+    new_stats = {}
+    for m in messages:
+        if m is None or not m.staged_dir:
+            continue
+        name = prefix + m.segment_name
+        os.replace(m.staged_dir, os.path.join(path, name))
+        if m.stats is not None:
+            new_stats[name] = m.stats
+    return new_stats
 
 
 def _table_name_from_dir(path: str) -> str:
@@ -1708,6 +1602,20 @@ def _table_name_from_dir(path: str) -> str:
         if base.endswith(suffix):
             return base[: -len(suffix)]
     return base
+
+
+@dataclass(frozen=True)
+class IndexOptions:
+    """The sink's per-column index options, parsed once from the write
+    options: column sets for each index type, plus the optional
+    (partitionColumn, numPartitions) Modulo partition map."""
+
+    inverted: frozenset = frozenset()
+    bloom: frozenset = frozenset()
+    partition: "tuple[str, int] | None" = None
+    text_index: frozenset = frozenset()
+    range_index: frozenset = frozenset()
+    json_index: frozenset = frozenset()
 
 
 @dataclass
@@ -1742,20 +1650,11 @@ class PinotDataSourceWriter(DataSourceArrowWriter):
         table: str,
         raw_columns: set,
         overwrite: bool,
-        inverted_columns: set | None = None,
-        bloom_columns: set | None = None,
-        partition_option: "tuple[str, int] | None" = None,
-        text_index_columns: set | None = None,
-        range_index_columns: set | None = None,
-        json_index_columns: set | None = None,
+        indexes: "IndexOptions | None" = None,
     ) -> None:
-        inverted_columns = inverted_columns or set()
-        bloom_columns = bloom_columns or set()
-        text_index_columns = text_index_columns or set()
-        range_index_columns = range_index_columns or set()
-        json_index_columns = json_index_columns or set()
-        if partition_option is not None:
-            pcol = partition_option[0]
+        ix = indexes or IndexOptions()
+        if ix.partition is not None:
+            pcol = ix.partition[0]
             ptypes = {f.name: f.dataType.simpleString() for f in schema.fields}
             if pcol not in ptypes:
                 raise ValueError(
@@ -1800,25 +1699,21 @@ class PinotDataSourceWriter(DataSourceArrowWriter):
             # payloads — media blobs, embeddings).
             # MV dict columns take inverted indexes too (Pinot parity:
             # bitmap i = docs whose array contains dictionary value i)
-            if f.name in inverted_columns and f.name in raw_columns:
+            if f.name in ix.inverted and f.name in raw_columns:
                 raise ValueError(
                     f"inverted index requires a dictionary column: {f.name}"
                 )
-            if f.name in bloom_columns and t in _MV_WRITE_TYPES:
+            if f.name in ix.bloom and t in _MV_WRITE_TYPES:
                 raise ValueError(
                     f"bloom filter requires a single-value column: {f.name}"
                 )
-            if f.name in text_index_columns and t != "string":
-                raise ValueError(
-                    f"text index requires a single-value STRING column: "
-                    f"{f.name}"
-                )
-            if f.name in json_index_columns and t != "string":
-                raise ValueError(
-                    f"JSON index requires a single-value STRING column: "
-                    f"{f.name}"
-                )
-            if f.name in range_index_columns and t not in (
+            for kind, cols in (("text", ix.text_index), ("JSON", ix.json_index)):
+                if f.name in cols and t != "string":
+                    raise ValueError(
+                        f"{kind} index requires a single-value STRING "
+                        f"column: {f.name}"
+                    )
+            if f.name in ix.range_index and t not in (
                 "int",
                 "bigint",
                 "float",
@@ -1834,12 +1729,7 @@ class PinotDataSourceWriter(DataSourceArrowWriter):
         self._path = path
         self._table = table
         self._raw = raw_columns
-        self._inverted = inverted_columns
-        self._bloom = bloom_columns
-        self._partition = partition_option
-        self._text_index = text_index_columns
-        self._range_index = range_index_columns
-        self._json_index = json_index_columns
+        self._ix = ix
         self._overwrite = overwrite
 
     def write(self, iterator) -> PinotWriterCommitMessage:
@@ -1869,6 +1759,7 @@ class PinotDataSourceWriter(DataSourceArrowWriter):
         for f in self._schema.fields:
             col = table.column(f.name)
             t = f.dataType.simpleString()
+            raw = f.name in self._raw
             null_mask = None
             if col.null_count:
                 # Nullable single-value columns (a rebuild extension — the
@@ -1908,7 +1799,7 @@ class PinotDataSourceWriter(DataSourceArrowWriter):
                         DataType(_MV_WRITE_TYPES[t]),
                         col.to_pylist(),
                         multi_value=True,
-                        inverted=f.name in self._inverted,
+                        inverted=f.name in self._ix.inverted,
                     )
                 )
                 continue
@@ -1922,12 +1813,8 @@ class PinotDataSourceWriter(DataSourceArrowWriter):
                         f.name,
                         DataType.BIG_DECIMAL,
                         col.to_pylist(),
-                        raw=f.name in self._raw,
-                        compression=(
-                            LZ4_LENGTH_PREFIXED
-                            if f.name in self._raw
-                            else PASS_THROUGH
-                        ),
+                        raw=raw,
+                        compression=LZ4_LENGTH_PREFIXED if raw else PASS_THROUGH,
                         null_mask=null_mask,
                         decimal=(f.dataType.precision, f.dataType.scale),
                     )
@@ -1950,53 +1837,36 @@ class PinotDataSourceWriter(DataSourceArrowWriter):
                 values = micros // 1000
             else:
                 values = col.combine_chunks().to_numpy()
-            if f.name in self._raw:
-                # var-byte STRING/BYTES chunks compress; fixed-width RAW
-                # numerics (beyond the reference — no dictionary for
-                # high-cardinality keys/timestamps) are stored plain.
-                compression = (
-                    LZ4_LENGTH_PREFIXED
-                    if t in ("string", "binary")
-                    else PASS_THROUGH
+            # var-byte STRING/BYTES chunks compress; fixed-width RAW
+            # numerics (beyond the reference — no dictionary for
+            # high-cardinality keys/timestamps) and dictionary columns are
+            # stored plain.
+            compression = (
+                LZ4_LENGTH_PREFIXED
+                if raw and t in ("string", "binary")
+                else PASS_THROUGH
+            )
+            ix = self._ix
+            specs.append(
+                ColumnSpec(
+                    f.name,
+                    dt,
+                    values,
+                    raw=raw,
+                    compression=compression,
+                    null_mask=null_mask,
+                    inverted=f.name in ix.inverted,
+                    bloom=f.name in ix.bloom,
+                    text_index=f.name in ix.text_index,
+                    range_index=f.name in ix.range_index,
+                    json_index=f.name in ix.json_index,
+                    partition_config=(
+                        ("Modulo", ix.partition[1])
+                        if ix.partition and f.name == ix.partition[0]
+                        else None
+                    ),
                 )
-                specs.append(
-                    ColumnSpec(
-                        f.name,
-                        dt,
-                        values,
-                        raw=True,
-                        compression=compression,
-                        null_mask=null_mask,
-                        bloom=f.name in self._bloom,
-                        text_index=f.name in self._text_index,
-                        range_index=f.name in self._range_index,
-                        json_index=f.name in self._json_index,
-                        partition_config=(
-                            ("Modulo", self._partition[1])
-                            if self._partition and f.name == self._partition[0]
-                            else None
-                        ),
-                    )
-                )
-            else:
-                specs.append(
-                    ColumnSpec(
-                        f.name,
-                        dt,
-                        values,
-                        null_mask=null_mask,
-                        inverted=f.name in self._inverted,
-                        bloom=f.name in self._bloom,
-                        text_index=f.name in self._text_index,
-                        range_index=f.name in self._range_index,
-                        json_index=f.name in self._json_index,
-                        partition_config=(
-                            ("Modulo", self._partition[1])
-                            if self._partition and f.name == self._partition[0]
-                            else None
-                        ),
-                    )
-                )
+            )
         write_segment(staged, seg_name, self._table, specs)
         return PinotWriterCommitMessage(
             staged_dir=staged,
@@ -2007,19 +1877,12 @@ class PinotDataSourceWriter(DataSourceArrowWriter):
     def commit(self, messages) -> None:
         import shutil
 
-        if self._overwrite:
-            for entry in os.listdir(self._path) if os.path.isdir(self._path) else []:
-                if entry == "tmp":
-                    continue
-                if os.path.isdir(os.path.join(self._path, entry, "v3")):
-                    shutil.rmtree(os.path.join(self._path, entry))
-        new_stats = {}
-        for m in messages:
-            if m is None or not m.staged_dir:
-                continue
-            os.replace(m.staged_dir, os.path.join(self._path, m.segment_name))
-            if getattr(m, "stats", None) is not None:
-                new_stats[m.segment_name] = m.stats
+        from pinot_segment.manifest import _segment_v3_dirs
+
+        if self._overwrite and os.path.isdir(self._path):
+            for v3 in _segment_v3_dirs(self._path):
+                shutil.rmtree(os.path.dirname(v3))
+        new_stats = _land_segments(self._path, messages)
         tmp = os.path.join(self._path, "tmp")
         try:
             # the isdir/listdir probes race with a concurrent committer's
@@ -2057,27 +1920,21 @@ def _specs_stats(specs, total_docs: int) -> dict:
 
     cols = {}
     for spec in specs:
+        nm = spec.null_mask
+        entry = cols[spec.name] = {
+            # declared (logical) dtype: a BIG_DECIMAL column stores as
+            # BYTES but the manifest/describe_table must report the truth
+            "dtype": spec.declared_dtype().value,
+            "has_nulls": nm is not None and bool(np.asarray(nm).any()),
+        }
         if spec.multi_value:
             # MV columns get a stats-free entry (r12 — parity with
             # collect_segment_stats' r11 fix): schema() needs the COMPLETE
             # column census per segment, and the sink path skipping MV
             # meant sink-WRITTEN MV tables still paid a per-segment
             # metadata parse at planning that rebuilt manifests did not
-            mv_nm = spec.null_mask
-            cols[spec.name] = {
-                "dtype": spec.declared_dtype().value,
-                "has_nulls": mv_nm is not None
-                and bool(np.asarray(mv_nm).any()),
-                "is_single_value": False,
-            }
+            entry["is_single_value"] = False
             continue
-        nm = spec.null_mask
-        entry = {
-            # declared (logical) dtype: a BIG_DECIMAL column stores as
-            # BYTES but the manifest/describe_table must report the truth
-            "dtype": spec.declared_dtype().value,
-            "has_nulls": nm is not None and bool(np.asarray(nm).any()),
-        }
         if not spec.raw:
             # dict-encoded: cardinality = dictionary entry count (values
             # already carry the null fill, matching metadata.properties'
@@ -2097,7 +1954,6 @@ def _specs_stats(specs, total_docs: int) -> dict:
                     )
                 except (TypeError, ValueError):
                     entry["cardinality"] = len(set(spec.values))
-        cols[spec.name] = entry
         if spec.declared_dtype().value not in _STATS_DTYPES:
             continue  # entry still carries dtype + nullability
         arrow = getattr(spec, "_arrow", None)
@@ -2113,7 +1969,6 @@ def _specs_stats(specs, total_docs: int) -> dict:
                 mm = pc.min_max(arrow)
                 entry["min"] = mm["min"].as_py()
                 entry["max"] = mm["max"].as_py()
-            cols[spec.name] = entry
             continue
         vals = spec.values
         if nm is not None:
@@ -2157,7 +2012,6 @@ def _update_manifest_after_commit(path: str, new_stats: dict) -> None:
     the exact post-commit segment set. Best-effort: the manifest is a
     planning optimization, never a commit failure — but only environmental /
     format errors are swallowed (programming errors surface)."""
-    import json
     import logging
 
     from pinot_segment.errors import InvalidFormatError, UnsupportedFeatureError
@@ -2179,12 +2033,7 @@ def _update_manifest_after_commit(path: str, new_stats: dict) -> None:
     try:
         from pinot_segment import manifest as M
 
-        prior: dict = {}
-        try:
-            with open(os.path.join(path, M.MANIFEST_NAME)) as f:
-                prior = json.load(f).get("segments", {})
-        except (OSError, json.JSONDecodeError):
-            prior = {}
+        prior = M.load_manifest(path, verify=False) or {}
         segments = {}
         backfills = 0
         for v3 in M._segment_v3_dirs(path):
@@ -2362,26 +2211,20 @@ def _stats_can_be_skipped(stats: dict, filters: list[Filter]) -> bool:
     segment open."""
     cols = stats.get("columns", {})
     for f in filters:
+        cs = None if isinstance(f, Not) else cols.get(f.attribute[0])
+        if cs is None:
+            continue
         if isinstance(f, IsNull):
             # IS NULL is provably empty only for a column with no
             # null-vector index (the non-nullable default).
-            cs = cols.get(f.attribute[0])
-            if cs is not None and not cs.get("has_nulls"):
+            if not cs.get("has_nulls"):
                 return True
             continue
         if isinstance(f, StringStartsWith):
-            cs = cols.get(f.attribute[0])
-            if (
-                cs is not None
-                and "min" in cs
-                and _startswith_pruned(f.value, cs["min"], cs["max"])
-            ):
+            if "min" in cs and _startswith_pruned(f.value, cs["min"], cs["max"]):
                 return True
             continue
         if not isinstance(f, _RANGE_FILTERS):
-            continue
-        cs = cols.get(f.attribute[0])
-        if cs is None:
             continue
         pm = cs.get("partitions")
         if pm is not None and _partition_map_pruned(
@@ -2399,45 +2242,18 @@ def _segment_can_be_skipped(
     segment_dir: str, filters: list[Filter], stats: dict | None = None
 ) -> bool:
     """Zone-map pruning: skip the segment iff some pushed filter is provably
-    unsatisfiable given a column's (min, max) / nullability stats — from the
-    table manifest when available (``stats``), else by opening the segment
-    and consulting its sorted dictionary / metadata bounds."""
-    if stats is not None:
-        return _stats_can_be_skipped(stats, filters)
-    from pinot_segment import SegmentReader
+    unsatisfiable given a column's (min, max) / nullability / partition
+    stats — from the table manifest when available (``stats``), else
+    collected by opening the segment. A segment that cannot be opened or
+    parsed is kept."""
+    if stats is None:
+        from pinot_segment.manifest import collect_segment_stats
 
-    try:
-        reader = SegmentReader.open(segment_dir)
-    except Exception:
-        return False
-    for f in filters:
-        if isinstance(f, IsNull):
-            cm = reader.metadata.columns.get(f.attribute[0])
-            if cm is not None and not cm.has_null_values:
-                return True
-            continue
-        if isinstance(f, StringStartsWith):
-            if f.attribute[0] in reader.metadata.columns:
-                mm = reader.column_min_max(f.attribute[0])
-                if mm is not None and _startswith_pruned(f.value, mm[0], mm[1]):
-                    return True
-            continue
-        if not isinstance(f, _RANGE_FILTERS):
-            continue
-        col = f.attribute[0]
-        if col not in reader.metadata.columns:
-            continue
-        cm = reader.metadata.columns[col]
-        if _partition_map_pruned(
-            f, cm.partition_function, cm.num_partitions, cm.partition_values
-        ):
-            return True
-        mm = reader.column_min_max(col)
-        if mm is None:
-            continue
-        if not _filter_bounds_check(f, mm[0], mm[1]):
-            return True
-    return False
+        try:
+            stats = collect_segment_stats(segment_dir)
+        except Exception:
+            return False
+    return _stats_can_be_skipped(stats, filters)
 
 
 def _bloom_says_absent(reader, filters) -> bool:
@@ -2466,69 +2282,40 @@ def _bloom_says_absent(reader, filters) -> bool:
 def _head_prune(survivors, stats, head, reverse: bool = False):
     """Drop segments that provably contain NONE of the table's first
     (``reverse=False``) or last (``reverse=True``) k rows in `col`
-    order: with segments ordered along the probe direction, a segment
-    prunes when the docs of segments wholly before it in that direction
-    already reach k. Segments without fresh stats are conservatively
-    kept and count nothing toward the cutoffs. Boundary TIES never count
-    as before (strict inequality) — tied rows may belong to the top-k
-    under a tiebreak order."""
+    order: a segment prunes when the docs of segments wholly before it in
+    that direction already reach k. Segments without fresh stats are
+    conservatively kept and count nothing toward the cutoffs. Boundary
+    TIES never count as before (strict inequality) — tied rows may belong
+    to the top-k under a tiebreak order."""
+    import bisect
+    from itertools import accumulate
+
     col, k = head
-    info = []
+    known, kept = [], set()
     for seg in survivors:
         st = stats.get(seg)
         cs = (st or {}).get("columns", {}).get(col)
         if st and cs and "min" in cs and "max" in cs:
-            mn, mx = cs["min"], cs["max"]
-            if reverse:
-                # mirror the axis: the LAST k rows become the first k of
-                # the negated order; swap and negate the bounds
-                mn, mx = _neg(mx), _neg(mn)
-            info.append((seg, mn, mx, int(st["total_docs"])))
+            known.append((seg, cs["min"], cs["max"], int(st["total_docs"])))
         else:
-            info.append((seg, None, None, 0))
-    import bisect
-
-    known = [x for x in info if x[1] is not None]
-    kept = {seg for seg, mn, mx, nd in info if mn is None}
-    # O(n log n), not O(n^2): docs wholly before a segment = prefix sum of
-    # segments' docs ordered by max, up to the probe segment's min
-    by_max = sorted(((mx, nd, seg) for seg, mn, mx, nd in known))
-    maxes = [x[0] for x in by_max]
-    prefix = [0]
-    for _, nd, _ in by_max:
-        prefix.append(prefix[-1] + nd)
+            kept.add(seg)
+    # O(n log n), not O(n^2): docs wholly before a segment = a prefix (or,
+    # for tail, suffix) sum of segments' docs ordered by the bound facing
+    # it. STRICT inequality: a segment whose max ties the probe's min may
+    # hold rows tied with the probe's first rows — counting it as "wholly
+    # before" would prune boundary-tied segments (and, for a constant
+    # column, every segment would prune every other).
+    edges = sorted((mn if reverse else mx, nd) for _, mn, mx, nd in known)
+    keys = [e for e, _ in edges]
+    cum = list(accumulate((nd for _, nd in edges), initial=0))
     for seg, mn, mx, nd in known:
-        # STRICTLY max < min: a segment whose max ties the probe's min may
-        # hold rows tied with the probe's first rows — counting it as
-        # "wholly before" would prune boundary-tied segments (and, for a
-        # constant column, every segment would prune every other)
-        i = bisect.bisect_left(maxes, mn)
-        before = prefix[i]
+        if reverse:  # segments whose min > this max sit wholly after it
+            before = cum[-1] - cum[bisect.bisect_right(keys, mx)]
+        else:  # segments whose max < this min sit wholly before it
+            before = cum[bisect.bisect_left(keys, mn)]
         if before < k:
             kept.add(seg)
     return [seg for seg in survivors if seg in kept]
-
-
-class _Neg:
-    """Order-reversing wrapper for non-numeric (string) bounds."""
-
-    __slots__ = ("v",)
-
-    def __init__(self, v):
-        self.v = v
-
-    def __lt__(self, other):
-        return other.v < self.v
-
-    def __le__(self, other):
-        return other.v <= self.v
-
-    def __eq__(self, other):
-        return isinstance(other, _Neg) and other.v == self.v
-
-
-def _neg(v):
-    return -v if isinstance(v, (int, float)) else _Neg(v)
 
 
 def _head_row_range(reader, head, reverse: bool = False):
@@ -2555,20 +2342,12 @@ def _head_row_range(reader, head, reverse: bool = False):
     if n <= k:
         return None
     if reverse:
-        kth = reader.read_columns_arrow(
-            [col], row_range=(n - k, n)
-        ).column(0)[0].as_py()
-        rng = reader.sorted_row_range(col, lo=kth, lo_inclusive=True)
-        if rng is None:
-            return None
-        return (rng[0], n)
-    kth = reader.read_columns_arrow([col], row_range=(0, k)).column(0)[
-        k - 1
-    ].as_py()
-    rng = reader.sorted_row_range(col, hi=kth, hi_inclusive=True)
-    if rng is None:
-        return None
-    return (0, rng[1])
+        kth = reader.read_columns_arrow([col], row_range=(n - k, n)).column(0)[0]
+        rng = reader.sorted_row_range(col, lo=kth.as_py(), lo_inclusive=True)
+        return None if rng is None else (rng[0], n)
+    kth = reader.read_columns_arrow([col], row_range=(0, k)).column(0)[k - 1]
+    rng = reader.sorted_row_range(col, hi=kth.as_py(), hi_inclusive=True)
+    return None if rng is None else (0, rng[1])
 
 
 def _sorted_row_range(reader, filters):
@@ -2578,17 +2357,7 @@ def _sorted_row_range(reader, filters):
     skips the segment without decoding anything."""
     rng = None
     for f in filters:
-        if isinstance(f, EqualTo):
-            bounds = (f.value, True, f.value, True)
-        elif isinstance(f, GreaterThan):
-            bounds = (f.value, False, None, True)
-        elif isinstance(f, GreaterThanOrEqual):
-            bounds = (f.value, True, None, True)
-        elif isinstance(f, LessThan):
-            bounds = (None, True, f.value, False)
-        elif isinstance(f, LessThanOrEqual):
-            bounds = (None, True, f.value, True)
-        elif isinstance(f, StringStartsWith):
+        if isinstance(f, StringStartsWith):
             # LIKE 'prefix%' on a sorted string column is the range
             # [prefix, prefix_upper) — a binary search, not a scan
             upper = _prefix_upper(f.value)
@@ -2596,135 +2365,162 @@ def _sorted_row_range(reader, filters):
                 f.value, True, None, True
             )
         else:
+            bounds = _range_bounds(f)
+        if bounds is None or f.attribute[0] not in reader.metadata.columns:
             continue
         name = f.attribute[0]
-        if name not in reader.metadata.columns:
-            continue
         try:
             r = reader.sorted_row_range(name, *bounds)
         except TypeError:  # incomparable filter value: no range
             continue
-        if r is None:
-            continue
-        rng = r if rng is None else (max(rng[0], r[0]), min(rng[1], r[1]))
+        rng = _intersect(rng, r)
     return rng
 
 
-def _text_match_rows(reader, text_match, row_range=None):
-    """Per-doc mask for the text_match read option, clipped to the sorted
-    row range: answered from the segment's token->bitmap postings when it
-    carries a text index (SegmentReader.text_match_mask), by
-    decode-and-tokenize with the SAME analyzer otherwise; a column this
-    segment predates (schema evolution) is all-NULL and matches nothing;
-    null docs never match (the index skips them at build time, the
-    fallback masks them out)."""
-    import numpy as np
+# value comparison of each range/eq filter kind, vectorized over numpy
+_COMPARE = {
+    EqualTo: operator.eq,
+    GreaterThan: operator.gt,
+    GreaterThanOrEqual: operator.ge,
+    LessThan: operator.lt,
+    LessThanOrEqual: operator.le,
+}
 
+
+def _range_bounds(f):
+    """(lo, lo_inclusive, hi, hi_inclusive) of a range/eq filter — the
+    shape SegmentReader.sorted_row_range and range_classify take — or None
+    for any other filter."""
+    if type(f) not in _COMPARE:
+        return None
+    v = f.value
+    return {
+        EqualTo: (v, True, v, True),
+        GreaterThan: (v, False, None, True),
+        GreaterThanOrEqual: (v, True, None, True),
+        LessThan: (None, True, v, False),
+        LessThanOrEqual: (None, True, v, True),
+    }[type(f)]
+
+
+def _intersect(a, b):
+    """Intersection of two [lo, hi) doc ranges, None standing for all
+    docs."""
+    if a is None or b is None:
+        return b if a is None else a
+    return (max(a[0], b[0]), min(a[1], b[1]))
+
+
+def _text_match_mask(reader, col, arg):
+    """TEXT_MATCH: the segment's token->bitmap postings when it carries a
+    text index (SegmentReader.text_match_mask), decode-and-tokenize with
+    the SAME analyzer otherwise."""
+    from pinot_segment.text_index import tokenize
+
+    terms, require_all = arg
+    _require_string(reader, col, "text_match")
+    test = all if require_all else any
+
+    def hit(v) -> bool:
+        toks = set(tokenize(v))
+        return test(t in toks for t in terms)
+
+    return _index_or_scan(
+        reader, col, reader.text_match_mask(col, terms, require_all), hit
+    )
+
+
+def _json_match_mask(reader, col, arg):
+    """JSON_MATCH: postings when the segment carries a JSON index
+    (SegmentReader.json_match_mask), parse-and-flatten with the SAME
+    contract otherwise (json_index.flatten_json)."""
+    from pinot_segment.json_index import flatten_json
+
+    path, value = arg
+    _require_string(reader, col, "json_match")
+    key = f"{path}={value}"
+    return _index_or_scan(
+        reader,
+        col,
+        reader.json_match_mask(col, path, value),
+        lambda v: key in flatten_json(v),
+    )
+
+
+def _mv_contains_mask(reader, col, raw_value):
+    """MV containment: the column's inverted bitmaps (bitmap i marks docs
+    whose array contains dictionary value i) when present, MV decode + a
+    per-row membership test otherwise. The probe value casts to the
+    column's storage type."""
     from pinot_segment.metadata import DataType
 
-    col, terms, require_all = text_match
-    n = reader.total_docs()
-    if col not in reader.metadata.columns:
-        m = np.zeros(n, dtype=bool)
+    cm = reader.metadata.get_column(col)
+    if cm.is_single_value:
+        raise ValueError(f"mv_contains requires a multi-value column, got {col}")
+    if cm.data_type in (DataType.INT, DataType.LONG):
+        value = int(raw_value)
+    elif cm.data_type in (DataType.FLOAT, DataType.DOUBLE):
+        value = float(raw_value)
+    elif cm.data_type is DataType.BOOLEAN:
+        value = raw_value.strip().lower() == "true"
     else:
-        if reader.metadata.get_column(col).data_type is not DataType.STRING:
-            raise ValueError(
-                f"text_match requires a STRING column, got {col}"
-            )
-        m = reader.text_match_mask(col, terms, require_all)
-        if m is None:
-            from pinot_segment.text_index import tokenize
+        value = raw_value
+    return _index_or_scan(
+        reader,
+        col,
+        reader.inverted_match_mask(col, [value]),
+        lambda row: value in row,
+    )
 
-            vals = reader.read_column(col)
 
-            def hit(v) -> bool:
-                toks = set(tokenize(v))
-                got = (t in toks for t in terms)
-                return all(got) if require_all else any(got)
+def _require_string(reader, col, kind) -> None:
+    from pinot_segment.metadata import DataType
 
-            m = np.fromiter((hit(v) for v in vals), dtype=bool, count=n)
-            nm = reader.null_mask(col)
-            if nm is not None:
-                m &= ~nm
+    if reader.metadata.get_column(col).data_type is not DataType.STRING:
+        raise ValueError(f"{kind} requires a STRING column, got {col}")
+
+
+def _index_or_scan(reader, col, indexed, row_test):
+    """A probe's per-doc mask: the index's answer when the segment has the
+    index, else ``row_test`` over each decoded value."""
+    import numpy as np
+
+    if indexed is not None:
+        return indexed
+    vals = reader.read_column(col)
+    return np.fromiter(map(row_test, vals), dtype=bool, count=len(vals))
+
+
+_PROBES = {
+    "text_match": _text_match_mask,
+    "json_match": _json_match_mask,
+    "mv_contains": _mv_contains_mask,
+}
+
+
+def _probe_rows(reader, probe, row_range=None):
+    """Per-doc mask for one (kind, column, argument) probe, clipped to the
+    row range. A column the segment predates (schema evolution) is
+    all-NULL and matches nothing; null docs never match (the text and JSON
+    indexes skip them at build time, the decode fallbacks see fills)."""
+    import numpy as np
+
+    kind, col, arg = probe
+    if col not in reader.metadata.columns:
+        m = np.zeros(reader.total_docs(), dtype=bool)
+    else:
+        m = _PROBES[kind](reader, col, arg)
+        nm = reader.null_mask(col)
+        if nm is not None:
+            m = m & ~nm
     if row_range is not None:
         m = m[row_range[0] : row_range[1]]
     return m
 
 
 def _mv_contains_rows(reader, mv_contains, row_range=None):
-    """Per-doc mask for the mv_contains read option, clipped to the sorted
-    row range: answered from the MV column's inverted bitmaps (bitmap i
-    marks docs whose array contains dictionary value i) when present,
-    by MV decode + per-row membership test otherwise. A column this
-    segment predates matches nothing; the probe value casts to the
-    column's storage type."""
-    import numpy as np
-
-    from pinot_segment.metadata import DataType
-
-    col, raw_value = mv_contains
-    n = reader.total_docs()
-    if col not in reader.metadata.columns:
-        m = np.zeros(n, dtype=bool)
-    else:
-        cm = reader.metadata.get_column(col)
-        if cm.is_single_value:
-            raise ValueError(
-                f"mv_contains requires a multi-value column, got {col}"
-            )
-        if cm.data_type in (DataType.INT, DataType.LONG):
-            value = int(raw_value)
-        elif cm.data_type in (DataType.FLOAT, DataType.DOUBLE):
-            value = float(raw_value)
-        elif cm.data_type is DataType.BOOLEAN:
-            value = raw_value.strip().lower() == "true"
-        else:
-            value = raw_value
-        m = reader.inverted_match_mask(col, [value])
-        if m is None:
-            vals = reader.read_column(col)
-            m = np.fromiter(
-                (value in row for row in vals), dtype=bool, count=n
-            )
-    if row_range is not None:
-        m = m[row_range[0] : row_range[1]]
-    return m
-
-
-def _json_match_rows(reader, json_match, row_range=None):
-    """Per-doc mask for the json_match read option, clipped to the sorted
-    row range: postings when the segment carries a JSON index
-    (SegmentReader.json_match_mask), parse-and-flatten with the SAME
-    contract otherwise (json_index.flatten_json); a column this segment
-    predates matches nothing; null docs never match."""
-    import numpy as np
-
-    from pinot_segment.metadata import DataType
-
-    col, path, value = json_match
-    n = reader.total_docs()
-    if col not in reader.metadata.columns:
-        m = np.zeros(n, dtype=bool)
-    else:
-        if reader.metadata.get_column(col).data_type is not DataType.STRING:
-            raise ValueError(
-                f"json_match requires a STRING column, got {col}"
-            )
-        m = reader.json_match_mask(col, path, value)
-        if m is None:
-            from pinot_segment.json_index import flatten_json
-
-            key = f"{path}={value}"
-            vals = reader.read_column(col)
-            m = np.fromiter(
-                (key in flatten_json(v) for v in vals), dtype=bool, count=n
-            )
-            nm = reader.null_mask(col)
-            if nm is not None:
-                m &= ~nm
-    if row_range is not None:
-        m = m[row_range[0] : row_range[1]]
-    return m
+    """The mask of a (column, value) mv_contains probe."""
+    return _probe_rows(reader, ("mv_contains", *mv_contains), row_range)
 
 
 def _row_mask(reader, filters, row_range=None):
@@ -2773,30 +2569,29 @@ def _row_mask(reader, filters, row_range=None):
     )
 
     def truth(f) -> "np.ndarray":
-        """Mask of rows where the predicate is TRUE under SQL 3VL (value
-        predicates are never true at null positions). NOT(p) is true
-        where p is FALSE — neither true nor null — so the complement
-        excludes the null positions too."""
+        """Mask of rows where the predicate is TRUE under SQL 3VL: value
+        predicates are never true at null positions, where the forward
+        index holds fills. NOT(p) is true where p is FALSE — neither true
+        nor null — so the complement excludes the null positions too."""
         name = _filter_attr(f)
         nm = nulls(name) if name in reader.metadata.columns else None
-        if isinstance(f, Not):
-            t = truth(f.child)
-            if isinstance(f.child, (IsNull, IsNotNull)):
-                return ~t  # null tests are two-valued
-            m = ~t
-            if nm is not None:
-                m = m & ~nm
-            return m
         if isinstance(f, IsNotNull):
             return np.ones(n, dtype=bool) if nm is None else ~nm
         if isinstance(f, IsNull):
             return np.zeros(n, dtype=bool) if nm is None else nm
+        if isinstance(f, Not):
+            m = ~truth(f.child)
+            if isinstance(f.child, (IsNull, IsNotNull)):
+                return m  # null tests are two-valued
+        else:
+            m = value_truth(f, name)
+        return m if nm is None else m & ~nm
+
+    def value_truth(f, name) -> "np.ndarray":
+        """Mask of rows whose stored value satisfies a value predicate,
+        fills at null positions included."""
         if isinstance(f, _STRING_FILTERS):
-            kind = {
-                StringStartsWith: "startswith",
-                StringEndsWith: "endswith",
-                StringContains: "contains",
-            }[type(f)]
+            kind, ref = _STRING_TESTS[type(f)]
             m = None
             if name in reader.metadata.columns:
                 # dictionary-accelerated: predicate over unique values,
@@ -2806,20 +2601,10 @@ def _row_mask(reader, filters, row_range=None):
                 # RAW strings: exact per-value evaluation over the object
                 # array (np.char would corrupt NUL-bearing values)
                 vals = colvals(name)
-                pattern = f.value
-                ref = {
-                    "startswith": lambda v: v.startswith(pattern),
-                    "endswith": lambda v: v.endswith(pattern),
-                    "contains": lambda v: pattern in v,
-                }[kind]
-                m = np.fromiter(
-                    (ref(v) for v in vals), dtype=bool, count=len(vals)
+                return np.fromiter(
+                    (ref(v, f.value) for v in vals), dtype=bool, count=len(vals)
                 )
-            else:
-                m = clip(m)
-            if nm is not None:
-                m = m & ~nm  # NULL never matches a string predicate
-            return m
+            return clip(m)
         if isinstance(f, (EqualTo, In)) and name in reader.metadata.columns:
             # Inverted index first: value(s) -> doc bitmap OR, no
             # forward-index decode of the filter column. Without one, a
@@ -2835,15 +2620,10 @@ def _row_mask(reader, filters, row_range=None):
             except (TypeError, ValueError):
                 im = None
             if im is not None:
-                m = clip(im)
-                if nm is not None:
-                    m = m & ~nm
-                return m
+                return clip(im)
+        bounds = _range_bounds(f)
         if (
-            isinstance(
-                f,
-                (EqualTo, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual),
-            )
+            bounds is not None
             and name in reader.metadata.columns
             and name not in col_cache  # already decoded → index saves nothing
             # dictionary columns only: their decode (bit-unpack + gather) is
@@ -2859,13 +2639,6 @@ def _row_mask(reader, filters, row_range=None):
             # candidates are selection-decoded and verified. The win case is
             # a selective range on an unclustered column, where zone maps
             # can't prune and the plain path decodes every doc.
-            bounds = {
-                EqualTo: lambda v: (v, True, v, True),
-                GreaterThan: lambda v: (v, False, None, True),
-                GreaterThanOrEqual: lambda v: (v, True, None, True),
-                LessThan: lambda v: (None, True, v, False),
-                LessThanOrEqual: lambda v: (None, True, v, True),
-            }[type(f)](f.value)
             cls = None
             try:
                 cls = reader.range_classify(name, *bounds)
@@ -2887,38 +2660,14 @@ def _row_mask(reader, filters, row_range=None):
                         cv = arr.cast(pa.int64()).to_numpy() // 1000
                     else:
                         cv = arr.to_numpy(zero_copy_only=False)
-                    op = {
-                        EqualTo: lambda x: x == f.value,
-                        GreaterThan: lambda x: x > f.value,
-                        GreaterThanOrEqual: lambda x: x >= f.value,
-                        LessThan: lambda x: x < f.value,
-                        LessThanOrEqual: lambda x: x <= f.value,
-                    }[type(f)]
-                    ok = np.asarray(op(cv), dtype=bool)
+                    ok = np.asarray(_COMPARE[type(f)](cv, f.value), dtype=bool)
                     m = definite.copy()
                     m[cand[ok]] = True
-                m = clip(m)
-                if nm is not None:
-                    m = m & ~nm
-                return m
+                return clip(m)
         vals = colvals(name)
-        if isinstance(f, EqualTo):
-            m = vals == f.value
-        elif isinstance(f, GreaterThan):
-            m = vals > f.value
-        elif isinstance(f, GreaterThanOrEqual):
-            m = vals >= f.value
-        elif isinstance(f, LessThan):
-            m = vals < f.value
-        elif isinstance(f, LessThanOrEqual):
-            m = vals <= f.value
-        elif isinstance(f, In):
-            m = np.isin(vals, list(f.value))
-        else:  # pragma: no cover - pushFilters only accepts the above
-            return np.ones(n, dtype=bool)
-        if nm is not None:
-            m = m & ~nm  # fills at null positions must not match
-        return m
+        if isinstance(f, In):
+            return np.isin(vals, list(f.value))
+        return _COMPARE[type(f)](vals, f.value)  # no other kind pushes
 
     for f in filters:
         if isinstance(f, IsNotNull) and (

@@ -419,12 +419,19 @@ def _encode_dictionary(spec: ColumnSpec) -> tuple[bytes, list, int]:
             # r15: one pass yields both the sorted dictionary AND each
             # doc's dict id (return_inverse); the caller's separate
             # searchsorted probe over all docs was the writer's dominant
-            # remaining cost (0.59 s of a 1.7 s 600k-row write,
-            # tools/profile_writer.py) and inverse ids are 4.5x cheaper
-            # at that shape. ids identical to searchsorted by definition
-            # (index of each value in the sorted unique array).
+            # remaining cost (0.59 s of a 1.7 s 600k-row write, measured
+            # with tools/profile_writer.py — since removed, in git history
+            # at f12fd1e) and inverse ids are 4.5x cheaper at that shape.
+            # ids identical to searchsorted by definition (index of each
+            # value in the sorted unique array). Only the numeric/boolean
+            # branch of write_segment consumes them, so only those specs
+            # keep them.
             uniq, inverse = np.unique(vals, return_inverse=True)
-            spec._dict_ids = inverse.astype(np.int64, copy=False)
+            if (
+                spec.data_type in _BE_DTYPES
+                or spec.data_type is DataType.BOOLEAN
+            ):
+                spec._dict_ids = inverse.astype(np.int64, copy=False)
         else:
             uniq = sorted(set(vals))
     out = bytearray(_DICT_MAGIC)

@@ -147,9 +147,9 @@ def test_head_disabled_under_pushed_filters(table):
 
     r = _reader(table, ("k", 10))
     list(r.pushFilters([ds.GreaterThanOrEqual(("k",), 250)]))
+    assert r._spec.head is None  # pushdown disabled, not half-applied
     rows = []
     for p in r.partitions():
-        assert p.head is None  # pushdown disabled, not half-applied
         for batch in p and r.read(p) or []:
             rows.extend(batch.column(0).to_pylist())
     # the filtered result is complete: ALL 150 rows >= 250, not 10

@@ -227,3 +227,18 @@ def test_numeric_dict_inverse_ids_match_searchsorted_path(tmp_path):
     finally:
         w._encode_dictionary = real_encode
     assert fast == legacy
+
+
+def test_string_ndarray_spec_keeps_no_dict_ids():
+    """Only the numeric/boolean encode branch consumes np.unique's inverse
+    ids, so a STRING spec built from a numpy array must not carry them."""
+    import pinot_segment.writer as w
+
+    spec = ColumnSpec(
+        "s", DataType.STRING, np.array(["b", "a", "b"], dtype=object)
+    )
+    w._encode_dictionary(spec)
+    assert spec._dict_ids is None
+    num = ColumnSpec("i", DataType.INT, np.array([3, 1, 3], dtype=np.int32))
+    w._encode_dictionary(num)
+    assert num._dict_ids.tolist() == [1, 0, 1]

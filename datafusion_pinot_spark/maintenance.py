@@ -34,12 +34,86 @@ import shutil
 from pyspark.sql import SparkSession
 
 
-def _retire(table_dir: str, name: str) -> None:
-    """Move a replaced segment to the snapshot retired store instead of
-    deleting it (see pinot_segment/snapshot.py)."""
+def _rewrite_segments(
+    spark: SparkSession,
+    table_dir: str,
+    jobs: list,
+    rewrite,
+    retain_replaced: bool = False,
+    drop: "list[str]" = (),
+) -> list:
+    """The one stage → stats → rename → manifest commit behind
+    compact_table, delete_rows and reindex_table.
+
+    Fans out ONE Spark task per job (``mapInPandas`` over the JSON-encoded
+    job list — no data moves through the driver). Each task calls
+    ``rewrite(job, tmp_dir)``, which stages at most one new segment under
+    the reader-skipped ``tmp/`` dir and returns ``(new_name, replaced,
+    info)``: the staged segment's name (None when it staged none), the
+    segments it replaces, and a JSON-able value for the caller; the task
+    adds the staged segment's manifest stats. The driver then renames
+    every staged segment in, retires (``retain_replaced``, see
+    pinot_segment/snapshot.py) or removes each replaced segment and every
+    name in ``drop``, and updates the manifest incrementally from the task
+    stats. A failing task fails the job before any rename, so the table
+    is untouched. Like Pinot's minion merge before the
+    segment-replacement protocol, the swap is not atomic for concurrent
+    readers. Returns each task's ``(new_name, replaced, info)``."""
+    from datafusion_pinot_spark.sources.pinot_datasource import (
+        _update_manifest_after_commit,
+    )
     from pinot_segment.snapshot import retire_segment
 
-    retire_segment(table_dir, name)
+    tmp_dir = os.path.join(table_dir, "tmp")
+    results = []
+    if jobs:
+        os.makedirs(tmp_dir, exist_ok=True)
+        rows = [(i, json.dumps(job)) for i, job in enumerate(jobs)]
+        sdf = spark.createDataFrame(
+            rows, "task_id int, job string"
+        ).repartition(len(rows), "task_id")
+
+        def run(batches):
+            import pandas as pd
+
+            from pinot_segment.manifest import collect_segment_stats
+
+            for pdf in batches:
+                out = []
+                for job in pdf["job"]:
+                    new_name, replaced, info = rewrite(json.loads(job), tmp_dir)
+                    stats = (
+                        collect_segment_stats(
+                            os.path.join(tmp_dir, new_name, "v3")
+                        )
+                        if new_name
+                        else None
+                    )
+                    out.append(json.dumps([new_name, replaced, info, stats]))
+                yield pd.DataFrame({"result": out})
+
+        results = [
+            json.loads(r["result"])
+            for r in sdf.mapInPandas(run, "result string").collect()
+        ]
+
+    new_stats: dict = {}
+    removed = list(drop)
+    for new_name, replaced, _, stats in results:
+        if new_name:
+            os.replace(
+                os.path.join(tmp_dir, new_name),
+                os.path.join(table_dir, new_name),
+            )
+            new_stats[new_name] = stats
+        removed += replaced
+    for seg in removed:
+        if retain_replaced:
+            retire_segment(table_dir, seg)
+        else:
+            shutil.rmtree(os.path.join(table_dir, seg), ignore_errors=True)
+    _update_manifest_after_commit(table_dir, new_stats)
+    return [(new_name, replaced, info) for new_name, replaced, info, _ in results]
 
 
 def _segment_doc_counts(table_dir: str) -> dict[str, int]:
@@ -113,86 +187,42 @@ def compact_table(
     scans planned against the pre-compaction segment list keep working;
     reclaim space later with ``snapshot.vacuum``."""
     from datafusion_pinot_spark.sources.pinot_datasource import (
-        _update_manifest_after_commit,
+        _table_name_from_dir,
     )
 
     groups = plan_compaction(table_dir, target_docs, min_group)
     if not groups:
         return {"groups": 0, "merged_segments": [], "removed_segments": []}
+    table_name = _table_name_from_dir(table_dir)
 
-    table_name = os.path.basename(table_dir.rstrip("/")).replace(
-        "_OFFLINE", ""
-    ).replace("_REALTIME", "")
-    tmp_dir = os.path.join(table_dir, "tmp")
-    os.makedirs(tmp_dir, exist_ok=True)
-
-    rows = [
-        (i, json.dumps(members)) for i, members in enumerate(groups)
-    ]
-    gdf = spark.createDataFrame(
-        rows, "group_id int, members string"
-    ).repartition(len(groups), "group_id")
-
-    def merge_groups(batches):
-        import pandas as pd
-
-        from pinot_segment.compact import merge_segments
-        from pinot_segment.manifest import collect_segment_stats
-
+    def merge_group(job, tmp_dir):
         import uuid
 
-        for pdf in batches:
-            out_rows = []
-            for _, row in pdf.iterrows():
-                members = json.loads(row["members"])
-                gid = int(row["group_id"])
-                name = (
-                    f"{table_name}_compacted_{gid}_{uuid.uuid4().hex[:8]}"
-                )
-                member_v3s = [
-                    os.path.join(table_dir, m, "v3") for m in members
-                ]
-                staged = os.path.join(tmp_dir, name)
-                v3 = merge_segments(
-                    member_v3s,
-                    staged,
-                    name,
-                    table_name,
-                    rollup=rollup,
-                    keep_latest=keep_latest,
-                )
-                out_rows.append(
-                    {
-                        "name": name,
-                        "members": row["members"],
-                        "stats": json.dumps(collect_segment_stats(str(v3))),
-                    }
-                )
-            yield pd.DataFrame(out_rows)
+        from pinot_segment.compact import merge_segments
 
-    results = gdf.mapInPandas(
-        merge_groups, "name string, members string, stats string"
-    ).collect()
+        gid, members = job
+        name = f"{table_name}_compacted_{gid}_{uuid.uuid4().hex[:8]}"
+        merge_segments(
+            [os.path.join(table_dir, m, "v3") for m in members],
+            os.path.join(tmp_dir, name),
+            name,
+            table_name,
+            rollup=rollup,
+            keep_latest=keep_latest,
+        )
+        return name, members, None
 
-    # -- driver-side commit: rename merged in, drop members, fix manifest --
-    from pinot_segment.snapshot import retire_segment
-
-    merged, removed, new_stats = [], [], {}
-    for r in results:
-        os.replace(os.path.join(tmp_dir, r["name"]), os.path.join(table_dir, r["name"]))
-        merged.append(r["name"])
-        new_stats[r["name"]] = json.loads(r["stats"])
-        for m in json.loads(r["members"]):
-            if retain_replaced:
-                retire_segment(table_dir, m)
-            else:
-                shutil.rmtree(os.path.join(table_dir, m), ignore_errors=True)
-            removed.append(m)
-    _update_manifest_after_commit(table_dir, new_stats)
+    results = _rewrite_segments(
+        spark,
+        table_dir,
+        list(enumerate(groups)),
+        merge_group,
+        retain_replaced=retain_replaced,
+    )
     return {
         "groups": len(groups),
-        "merged_segments": merged,
-        "removed_segments": removed,
+        "merged_segments": [name for name, _, _ in results],
+        "removed_segments": [m for _, members, _ in results for m in members],
     }
 
 
@@ -287,7 +317,7 @@ def delete_rows(
     "rows_deleted": int}.
     """
     from datafusion_pinot_spark.sources.pinot_datasource import (
-        _update_manifest_after_commit,
+        _table_name_from_dir,
     )
     from pinot_segment import SegmentReader, manifest as M
 
@@ -324,99 +354,46 @@ def delete_rows(
         else:
             rewrite.append(key)
 
-    table_name = os.path.basename(table_dir.rstrip("/")).replace(
-        "_OFFLINE", ""
-    ).replace("_REALTIME", "")
-    tmp_dir = os.path.join(table_dir, "tmp")
-    new_stats: dict = {}
-    rewritten: list[str] = []
-    if rewrite:
-        os.makedirs(tmp_dir, exist_ok=True)
-        rows = [(i, name) for i, name in enumerate(sorted(rewrite))]
-        sdf = spark.createDataFrame(
-            rows, "task_id int, segment string"
-        ).repartition(len(rows), "task_id")
+    table_name = _table_name_from_dir(table_dir)
 
-        def rewrite_one(batches):
-            import uuid
+    def rewrite_one(seg, tmp_dir):
+        import uuid
 
-            import numpy as np
-            import pandas as pd
+        import numpy as np
 
-            from pinot_segment.compact import filter_segment
-            from pinot_segment.manifest import collect_segment_stats
+        from pinot_segment.compact import filter_segment
 
-            for pdf in batches:
-                out = []
-                for _, row in pdf.iterrows():
-                    seg = row["segment"]
-                    v3 = os.path.join(table_dir, seg, "v3")
-                    reader = SegmentReader.open(v3)
-                    vals = np.asarray(reader.read_column(column))
-                    matches = (vals >= lo) & (vals <= hi)
-                    nm = reader.null_mask(column)
-                    if nm is not None:
-                        matches &= ~nm  # NULL never matches the predicate
-                    keep = ~matches
-                    if keep.all():
-                        out.append(
-                            {"segment": seg, "new_name": "", "stats": "",
-                             "deleted": 0}
-                        )
-                        continue
-                    if not keep.any():
-                        out.append(
-                            {"segment": seg, "new_name": None, "stats": "",
-                             "deleted": int(len(keep))}
-                        )
-                        continue
-                    name = f"{seg}_del{uuid.uuid4().hex[:8]}"
-                    staged = os.path.join(tmp_dir, name)
-                    nv3 = filter_segment(v3, staged, name, table_name, keep)
-                    out.append(
-                        {
-                            "segment": seg,
-                            "new_name": name,
-                            "stats": json.dumps(
-                                collect_segment_stats(str(nv3))
-                            ),
-                            "deleted": int((~keep).sum()),
-                        }
-                    )
-                yield pd.DataFrame(out)
+        v3 = os.path.join(table_dir, seg, "v3")
+        reader = SegmentReader.open(v3)
+        vals = np.asarray(reader.read_column(column))
+        matches = (vals >= lo) & (vals <= hi)
+        nm = reader.null_mask(column)
+        if nm is not None:
+            matches &= ~nm  # NULL never matches the predicate
+        deleted = int(matches.sum())
+        if deleted == 0:
+            return None, [], 0  # zone maps were conservative
+        if deleted == len(matches):
+            return None, [seg], deleted  # every row matched after all
+        name = f"{seg}_del{uuid.uuid4().hex[:8]}"
+        filter_segment(v3, os.path.join(tmp_dir, name), name, table_name, ~matches)
+        return name, [seg], deleted
 
-        results = sdf.mapInPandas(
-            rewrite_one,
-            "segment string, new_name string, stats string, deleted long",
-        ).collect()
-        for r in results:
-            dropped_rows += int(r["deleted"])
-            if r["new_name"] == "":
-                continue  # zone maps were conservative; nothing matched
-            if r["new_name"] is None:
-                drop.append(r["segment"])  # every row matched after all
-                continue
-            os.replace(
-                os.path.join(tmp_dir, r["new_name"]),
-                os.path.join(table_dir, r["new_name"]),
-            )
-            if retain_replaced:
-                _retire(table_dir, r["segment"])
-            else:
-                shutil.rmtree(
-                    os.path.join(table_dir, r["segment"]), ignore_errors=True
-                )
-            rewritten.append(r["segment"])
-            new_stats[r["new_name"]] = json.loads(r["stats"])
-    for seg in drop:
-        if retain_replaced:
-            _retire(table_dir, seg)
-        else:
-            shutil.rmtree(os.path.join(table_dir, seg), ignore_errors=True)
-    _update_manifest_after_commit(table_dir, new_stats)
+    results = _rewrite_segments(
+        spark,
+        table_dir,
+        sorted(rewrite),
+        rewrite_one,
+        retain_replaced=retain_replaced,
+        drop=drop,
+    )
+    for name, replaced, deleted in results:
+        dropped_rows += deleted
+        if name is None:
+            drop += replaced
     return {
         "dropped": sorted(drop),
-        "rewritten": sorted(rewritten),
+        "rewritten": sorted(old[0] for name, old, _ in results if name),
         "untouched": untouched,
         "rows_deleted": dropped_rows,
     }
@@ -522,87 +499,54 @@ def reindex_table(
     ``pinot_segment.compact.reindex_segment``; commit is rename-based
     under ``tmp/``, manifest updated incrementally from task stats.
 
+    An index the column cannot carry in some segment (say ``text`` on a
+    LONG, or ``inverted`` on a RAW column) raises ValueError during the
+    triage, before any task runs.
+
     Returns {"reindexed": [...], "skipped": N}.
     """
     from datafusion_pinot_spark.sources.pinot_datasource import (
-        _update_manifest_after_commit,
+        _table_name_from_dir,
     )
     from pinot_segment import SegmentReader, manifest as M
+    from pinot_segment.compact import _INDEX_FLAGS, check_index
 
-    flag_attr = {
-        "inverted": "has_inverted_index",
-        "bloom": "has_bloom_filter",
-        "range": "has_range_index",
-        "text": "has_text_index",
-        "json": "has_json_index",
-    }[index]
     todo: list[str] = []
     skipped = 0
     for v3 in M._segment_v3_dirs(table_dir):
         cm = SegmentReader.open(v3).metadata.get_column(column)
         if cm is None:
             raise ValueError(f"column not in segment: {column} ({v3})")
-        if getattr(cm, flag_attr):
+        check_index(column, cm, index)
+        if getattr(cm, _INDEX_FLAGS[index]):
             skipped += 1
         else:
             todo.append(M._seg_key(v3))
     if not todo:
         return {"reindexed": [], "skipped": skipped}
+    table_name = _table_name_from_dir(table_dir)
 
-    table_name = os.path.basename(table_dir.rstrip("/")).replace(
-        "_OFFLINE", ""
-    ).replace("_REALTIME", "")
-    tmp_dir = os.path.join(table_dir, "tmp")
-    os.makedirs(tmp_dir, exist_ok=True)
-    rows = [(i, name) for i, name in enumerate(sorted(todo))]
-    sdf = spark.createDataFrame(
-        rows, "task_id int, segment string"
-    ).repartition(len(rows), "task_id")
-
-    def rebuild_one(batches):
+    def rebuild_one(seg, tmp_dir):
         import uuid
 
-        import pandas as pd
-
         from pinot_segment.compact import reindex_segment
-        from pinot_segment.manifest import collect_segment_stats
 
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                seg = row["segment"]
-                v3 = os.path.join(table_dir, seg, "v3")
-                name = f"{seg}_ix{uuid.uuid4().hex[:8]}"
-                staged = os.path.join(tmp_dir, name)
-                nv3 = reindex_segment(
-                    v3, staged, name, table_name, column, index
-                )
-                out.append(
-                    {
-                        "segment": seg,
-                        "new_name": name,
-                        "stats": json.dumps(collect_segment_stats(str(nv3))),
-                    }
-                )
-            yield pd.DataFrame(out)
+        name = f"{seg}_ix{uuid.uuid4().hex[:8]}"
+        reindex_segment(
+            os.path.join(table_dir, seg, "v3"),
+            os.path.join(tmp_dir, name),
+            name,
+            table_name,
+            column,
+            index,
+        )
+        return name, [seg], None
 
-    results = sdf.mapInPandas(
-        rebuild_one, "segment string, new_name string, stats string"
-    ).collect()
-    new_stats: dict = {}
-    reindexed: list[str] = []
-    for r in results:
-        os.replace(
-            os.path.join(tmp_dir, r["new_name"]),
-            os.path.join(table_dir, r["new_name"]),
-        )
-        shutil.rmtree(
-            os.path.join(table_dir, r["segment"]), ignore_errors=True
-        )
-        reindexed.append(r["segment"])
-        new_stats[r["new_name"]] = json.loads(r["stats"])
-    _update_manifest_after_commit(table_dir, new_stats)
-    return {"reindexed": sorted(reindexed), "skipped": skipped}
+    results = _rewrite_segments(spark, table_dir, sorted(todo), rebuild_one)
+    return {
+        "reindexed": sorted(seg for _, (seg,), _ in results),
+        "skipped": skipped,
+    }
 
 
 def _anchor_widest(dirs: list[str]) -> list[str]:

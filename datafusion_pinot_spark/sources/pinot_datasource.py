@@ -1736,8 +1736,8 @@ class PinotDataSourceWriter(DataSourceArrowWriter):
         """Arrow-batch write path (DataSourceArrowWriter): Spark hands whole
         columnar batches — no per-row Python iteration. Numeric/boolean
         columns stay numpy end-to-end into the encoder; string/binary
-        columns materialize Python values once for the dict/var-byte
-        encoders."""
+        columns go to ColumnSpec as the Arrow columns they arrive as, and
+        the dict/var-byte encoders read their buffers."""
         import uuid
 
         import pyarrow as pa
@@ -1822,11 +1822,10 @@ class PinotDataSourceWriter(DataSourceArrowWriter):
                 continue
             dt = DataType(_WRITE_TYPES[t])
             if t in ("string", "binary"):
-                # hand the Arrow array straight to the writer: the
-                # dictionary/var-byte encoders consume its buffers without
-                # materializing per-value Python objects (r14 optimization;
-                # ColumnSpec falls back to a list on the cold paths)
-                values = col.combine_chunks()
+                # hand the Arrow column straight to the writer: ColumnSpec
+                # makes one 64-bit-offset array of it, and the encoders
+                # consume its buffers with no per-value Python objects
+                values = col
             elif t == "boolean":
                 values = col.combine_chunks().to_numpy(zero_copy_only=False)
             elif t in ("timestamp", "timestamp_ntz"):
@@ -1942,27 +1941,18 @@ def _specs_stats(specs, total_docs: int) -> dict:
             # (operators/segment_distinct.py) work from this manifest
             # without opening the segment
             entry["has_dictionary"] = True
-            card = getattr(spec, "_dict_cardinality", None)
-            if card is not None:
-                # write_segment caches the dictionary entry count — no
-                # second distinct pass over the values (r14 optimization)
-                entry["cardinality"] = card
-            else:
-                try:
-                    entry["cardinality"] = int(
-                        np.unique(np.asarray(spec.values)).size
-                    )
-                except (TypeError, ValueError):
-                    entry["cardinality"] = len(set(spec.values))
+            # write_segment caches the dictionary entry count — no second
+            # distinct pass over the values (r14 optimization)
+            entry["cardinality"] = spec._dict_cardinality
         if spec.declared_dtype().value not in _STATS_DTYPES:
             continue  # entry still carries dtype + nullability
-        arrow = getattr(spec, "_arrow", None)
-        if arrow is not None:
-            # Arrow fast path: min/max from one C pass (byte order ==
-            # Python's code-point order for UTF-8 strings)
+        if spec._arrow is not None:
+            # text: min/max from one C pass (byte order == Python's
+            # code-point order for UTF-8 strings)
             import pyarrow as pa
             import pyarrow.compute as pc
 
+            arrow = spec._arrow
             if nm is not None:
                 arrow = arrow.filter(pa.array(~np.asarray(nm)))
             if len(arrow):
@@ -1970,18 +1960,12 @@ def _specs_stats(specs, total_docs: int) -> dict:
                 entry["min"] = mm["min"].as_py()
                 entry["max"] = mm["max"].as_py()
             continue
-        vals = spec.values
+        vals = np.asarray(spec.values)
         if nm is not None:
-            vals = (
-                vals[~np.asarray(nm)]
-                if isinstance(vals, np.ndarray)
-                else [v for v, is_null in zip(vals, nm) if not is_null]
-            )
+            vals = vals[~np.asarray(nm)]
         if len(vals):
-            mn = vals.min() if isinstance(vals, np.ndarray) else min(vals)
-            mx = vals.max() if isinstance(vals, np.ndarray) else max(vals)
-            entry["min"] = mn.item() if hasattr(mn, "item") else mn
-            entry["max"] = mx.item() if hasattr(mx, "item") else mx
+            entry["min"] = vals.min().item()
+            entry["max"] = vals.max().item()
         if spec.partition_config is not None:
             func, num = spec.partition_config
             pids = np.unique(np.asarray(vals, dtype=np.int64) % num)

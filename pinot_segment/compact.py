@@ -35,46 +35,164 @@ from pinot_segment.var_byte import LZ4_LENGTH_PREFIXED, PASS_THROUGH
 from pinot_segment.writer import ColumnSpec, write_segment
 
 _ROLLUP_AGGS = ("sum", "min", "max")
+_TEXT = (DataType.STRING, DataType.BYTES)
+_RANGE_TYPES = (
+    DataType.INT,
+    DataType.LONG,
+    DataType.TIMESTAMP,
+    DataType.FLOAT,
+    DataType.DOUBLE,
+)
+# index kind -> the ColumnMetadata flag that says a segment carries it
+_INDEX_FLAGS = {
+    "inverted": "has_inverted_index",
+    "bloom": "has_bloom_filter",
+    "range": "has_range_index",
+    "text": "has_text_index",
+    "json": "has_json_index",
+}
 
-# r14 optimization: single-value STRING/BYTES columns flow reader -> writer
-# as Arrow arrays (dictionary take / var-byte chunk slices on the read side,
-# the writer's Arrow encode chain on the write side) with zero per-value
-# Python objects. Tests flip this off to prove byte-identity with the
-# historical list path.
-_ARROW_TEXT = True
 
-# 32-bit-offset string/binary arrays cap one combined column at 2 GiB of
-# payload; columns whose merged Arrow pieces would exceed this fall back
-# to the any-size list path (r15, ADVICE r14). Module-level so tests can
-# shrink it to exercise the fallback without allocating gigabytes.
-_ARROW_TEXT_MAX_BYTES = (1 << 31) - (1 << 20)
-
-
-def _text_arrow_ok(reader: SegmentReader, name: str) -> bool:
-    """Cheap metadata-only gate for the Arrow text fast path (r15, ADVICE
-    r14: callers check this across ALL members BEFORE doing any Arrow
-    decode, so one nullable member no longer wastes the full decode of
-    every earlier member)."""
-    if not _ARROW_TEXT:
+def _index_valid(kind: str, meta) -> bool:
+    """Where a rewritten segment may carry each index kind: single-value
+    columns only, inverted on dictionary columns, text/JSON on STRING,
+    range on numerics."""
+    if not meta.is_single_value:
         return False
-    m = reader.metadata.get_column(name)
-    return (
-        m.is_single_value
-        and not m.has_null_values
-        and m.data_type in (DataType.STRING, DataType.BYTES)
+    if kind == "inverted":
+        return meta.has_dictionary
+    if kind in ("text", "json"):
+        return meta.data_type is DataType.STRING
+    if kind == "range":
+        return meta.data_type in _RANGE_TYPES
+    return True  # bloom
+
+
+def check_index(column: str, meta, index: str) -> None:
+    """Raise ValueError unless ``index`` can be added to ``column``."""
+    if index not in _INDEX_FLAGS:
+        raise ValueError(f"unknown index kind: {index!r}")
+    if not _index_valid(index, meta):
+        shape = "single-value" if meta.is_single_value else "multi-value"
+        encoding = "dictionary" if meta.has_dictionary else "RAW"
+        raise ValueError(
+            f"column '{column}': {index} index is not valid on a {shape} "
+            f"{encoding} {meta.data_type.value} column"
+        )
+
+
+def _column_spec(
+    name: str, metas: list, values, null_mask, add_index: "str | None" = None
+) -> ColumnSpec:
+    """The rewritten column's spec: the physical configuration of the
+    source segments' ``metas`` (RAW vs dictionary, multi-value,
+    nullability, partition map), their index set as a union — if ANY
+    source carried an index the output keeps it (a fleet rollout
+    mid-stream must not silently drop indexes) — plus ``add_index``
+    (which the caller checks with :func:`check_index`), all constrained
+    to where the index is valid. RAW STRING/BYTES/BIG_DECIMAL re-compress
+    with the sink's default codec (LZ4 length-prefixed); the original
+    per-chunk codec is not part of the logical schema."""
+    m = metas[0]
+    has = {
+        kind: _index_valid(kind, m)
+        and (kind == add_index or any(getattr(x, flag) for x in metas))
+        for kind, flag in _INDEX_FLAGS.items()
+    }
+    raw = not m.has_dictionary
+    partition_config = None
+    if m.partition_function is not None and all(
+        x.partition_function == m.partition_function
+        and x.num_partitions == m.num_partitions
+        for x in metas
+    ):
+        partition_config = (m.partition_function, m.num_partitions)
+    return ColumnSpec(
+        name,
+        m.data_type,
+        values,
+        raw=raw,
+        compression=(
+            LZ4_LENGTH_PREFIXED
+            if raw and m.data_type in (*_TEXT, DataType.BIG_DECIMAL)
+            else PASS_THROUGH
+        ),
+        multi_value=not m.is_single_value,
+        null_mask=null_mask,
+        inverted=has["inverted"],
+        bloom=has["bloom"],
+        text_index=has["text"],
+        range_index=has["range"],
+        json_index=has["json"],
+        partition_config=partition_config,
+        decimal=(
+            (m.decimal_precision, m.decimal_scale)
+            if m.data_type is DataType.BIG_DECIMAL
+            else None
+        ),
     )
 
 
-def _text_arrow(reader: SegmentReader, name: str, selection=None):
-    """Arrow payload for a single-value null-free STRING/BYTES column, or
-    None when the fast path does not apply (flag off, MV, nullable, other
-    types). Nullable columns stay on read_column: the writer re-encodes
-    the forward index's *fill* values (null_mask carries the truth), but
-    read_columns_arrow applies the null-vector as Arrow validity and
-    would lose them."""
-    if not _text_arrow_ok(reader, name):
+def _text_arrow(readers: list, name: str, selection=None):
+    """The column across ``readers`` as one Arrow ChunkedArray (a chunk per
+    reader) when it is single-value null-free STRING/BYTES in EVERY
+    reader, else None. The metadata gate runs over all readers before any
+    decode, so a nullable late member costs no wasted decode. Nullable
+    text stays on read_column: the writer re-encodes the forward index's
+    *fill* values (null_mask carries the truth), but read_columns_arrow
+    applies the null-vector as Arrow validity and would lose them."""
+    for r in readers:
+        m = r.metadata.get_column(name)
+        if not m.is_single_value or m.has_null_values or m.data_type not in _TEXT:
+            return None
+    import pyarrow as pa
+
+    return pa.chunked_array(
+        [
+            chunk
+            for r in readers
+            for chunk in r.read_columns_arrow([name], selection=selection)
+            .column(0)
+            .chunks
+        ]
+    )
+
+
+def _read_values(readers: list, name: str, selection=None, arrow=True):
+    """One column's values across ``readers``, concatenated in order;
+    ``selection`` (doc ids, single reader) keeps only those docs. Text
+    eligible for :func:`_text_arrow` stays in Arrow (RAW text chunks
+    holding no selected doc never decompress); everything else comes from
+    read_column."""
+    values = _text_arrow(readers, name, selection) if arrow else None
+    if values is not None:
+        return values
+    parts = [r.read_column(name) for r in readers]
+    if selection is not None:
+        parts = [
+            p[selection] if isinstance(p, np.ndarray) else [p[i] for i in selection]
+            for p in parts
+        ]
+    if readers[0].metadata.get_column(name).is_single_value and isinstance(
+        parts[0], np.ndarray
+    ):
+        return np.concatenate(parts)
+    return [v for part in parts for v in part]
+
+
+def _read_null_mask(readers: list, name: str, selection=None):
+    """The column's per-doc null flags across ``readers`` (None when no
+    reader has nulls)."""
+    if not any(r.metadata.get_column(name).has_null_values for r in readers):
         return None
-    return reader.read_columns_arrow([name], selection=selection).column(0)
+    nm = np.concatenate(
+        [
+            nm if (nm := r.null_mask(name)) is not None
+            else np.zeros(r.total_docs(), dtype=bool)
+            for r in readers
+        ]
+    )
+    return nm if selection is None else nm[selection]
 
 
 def merge_segments(
@@ -108,103 +226,27 @@ def merge_segments(
     cols: dict[str, dict] = {}
     for name in base_cols:
         metas = [r.metadata.get_column(name) for r in readers]
-        dt = metas[0].data_type
-        raw = not metas[0].has_dictionary
-        mv = not metas[0].is_single_value
-        for m in metas[1:]:
+        m = metas[0]
+        for x in metas[1:]:
             if (
-                m.data_type is not dt
-                or (not m.has_dictionary) != raw
-                or (not m.is_single_value) != mv
+                x.data_type is not m.data_type
+                or x.has_dictionary != m.has_dictionary
+                or x.is_single_value != m.is_single_value
             ):
                 raise UnsupportedFeatureError(
                     f"cannot merge: column '{name}' has inconsistent "
                     "physical type across members"
                 )
-        values = None
-        if rollup is None and keep_latest is None:
-            # plain concat merge: text columns ride through as Arrow
-            # chunks (one per member), re-encoded with no Python values;
-            # rollup/keep_latest need pandas frames so they keep the
-            # list path.
-            # metadata gate first (r15, ADVICE r14): only when EVERY
-            # member is eligible do the Arrow decodes run — a nullable
-            # late member used to discard the full decode of every
-            # earlier one
-            if all(_text_arrow_ok(r, name) for r in readers):
-                import pyarrow as pa
-
-                chunks = [_text_arrow(r, name) for r in readers]
-                pieces = [piece for col in chunks for piece in col.chunks]
-                # r15 (ADVICE r14): past the 32-bit offset cap the
-                # writer's combine_chunks() would raise ArrowInvalid —
-                # fall back to the list path (any size). The size is only
-                # knowable after decode, so this rare path pays a double
-                # read; correctness over speed at the overflow boundary.
-                if sum(p.nbytes for p in pieces) < _ARROW_TEXT_MAX_BYTES:
-                    values = pa.chunked_array(pieces)
-        if values is None:
-            parts = [r.read_column(name) for r in readers]
-            if mv:
-                values = [row for part in parts for row in part]
-            elif isinstance(parts[0], np.ndarray):
-                values = np.concatenate(parts)
-            else:
-                values = [v for part in parts for v in part]
-        has_nulls = any(m.has_null_values for m in metas)
-        null_mask = None
-        if has_nulls:
-            null_mask = np.concatenate(
-                [
-                    (
-                        nm
-                        if (nm := r.null_mask(name)) is not None
-                        else np.zeros(r.total_docs(), dtype=bool)
-                    )
-                    for r in readers
-                ]
-            )
-        partition_config = None
-        if metas[0].partition_function is not None and all(
-            m.partition_function == metas[0].partition_function
-            and m.num_partitions == metas[0].num_partitions
-            for m in metas
-        ):
-            partition_config = (
-                metas[0].partition_function,
-                metas[0].num_partitions,
-            )
         cols[name] = {
-            "dt": dt,
-            "raw": raw,
-            "mv": mv,
-            "values": values,
-            "null_mask": null_mask,
-            # Index configuration is a union: if ANY member carried the
-            # index the merged segment keeps it (a fleet rollout
-            # mid-stream must not silently drop indexes), constrained to
-            # where it is valid.
-            "inverted": any(m.has_inverted_index for m in metas)
-            and not raw
-            and not mv,
-            "bloom": any(m.has_bloom_filter for m in metas) and not mv,
-            "text_index": any(m.has_text_index for m in metas)
-            and not mv
-            and dt is DataType.STRING,
-            "json_index": any(m.has_json_index for m in metas)
-            and not mv
-            and dt is DataType.STRING,
-            "range_index": any(m.has_range_index for m in metas)
-            and not mv
-            and dt
-            in (
-                DataType.INT,
-                DataType.LONG,
-                DataType.TIMESTAMP,
-                DataType.FLOAT,
-                DataType.DOUBLE,
+            "metas": metas,
+            "dt": m.data_type,
+            "mv": not m.is_single_value,
+            # rollup/keep_latest work on pandas frames, so only a plain
+            # concat merge keeps text in Arrow
+            "values": _read_values(
+                readers, name, arrow=rollup is None and keep_latest is None
             ),
-            "partition_config": partition_config,
+            "null_mask": _read_null_mask(readers, name),
         }
 
     if rollup is not None and keep_latest is not None:
@@ -216,33 +258,10 @@ def merge_segments(
     if keep_latest is not None:
         _apply_keep_latest(cols, *keep_latest)
 
-    specs = []
-    for name in base_cols:
-        if rollup is not None and name not in cols:
-            continue  # unreachable today; guards future column drops
-        c = cols[name]
-        compression = (
-            LZ4_LENGTH_PREFIXED
-            if c["raw"] and c["dt"] in (DataType.STRING, DataType.BYTES)
-            else PASS_THROUGH
-        )
-        specs.append(
-            ColumnSpec(
-                name,
-                c["dt"],
-                c["values"],
-                raw=c["raw"],
-                compression=compression,
-                multi_value=c["mv"],
-                null_mask=c["null_mask"],
-                inverted=c["inverted"],
-                bloom=c["bloom"],
-                text_index=c["text_index"],
-                range_index=c["range_index"],
-                json_index=c["json_index"],
-                partition_config=c["partition_config"],
-            )
-        )
+    specs = [
+        _column_spec(name, c["metas"], c["values"], c["null_mask"])
+        for name, c in cols.items()
+    ]
     return write_segment(segment_dir, segment_name, table_name, specs)
 
 
@@ -376,74 +395,16 @@ def filter_segment(
             "instead of writing an empty one"
         )
     idx = np.flatnonzero(keep_mask)
-
-    specs = []
-    for name in reader.column_names():
-        m = reader.metadata.get_column(name)
-        dt = m.data_type
-        raw = not m.has_dictionary
-        mv = not m.is_single_value
-        # selective Arrow decode: RAW text chunks holding no kept doc never
-        # decompress, dict text takes ids straight into the writer
-        values = _text_arrow(reader, name, selection=idx)
-        if values is None:
-            values = reader.read_column(name)
-            if mv:
-                values = [values[i] for i in idx]
-            elif isinstance(values, np.ndarray):
-                values = values[keep_mask]
-            else:
-                values = [values[i] for i in idx]
-        null_mask = None
-        if m.has_null_values:
-            nm = reader.null_mask(name)
-            if nm is not None:
-                nm = nm[keep_mask]
-                null_mask = nm if nm.any() else None
-        partition_config = (
-            (m.partition_function, m.num_partitions)
-            if m.partition_function is not None
-            else None
+    specs = [
+        _column_spec(
+            name,
+            [reader.metadata.get_column(name)],
+            _read_values([reader], name, selection=idx),
+            _read_null_mask([reader], name, selection=idx),
         )
-        compression = (
-            LZ4_LENGTH_PREFIXED
-            if raw and dt in (DataType.STRING, DataType.BYTES)
-            else PASS_THROUGH
-        )
-        specs.append(
-            ColumnSpec(
-                name,
-                dt,
-                values,
-                raw=raw,
-                compression=compression,
-                multi_value=mv,
-                null_mask=null_mask,
-                inverted=m.has_inverted_index and not raw and not mv,
-                bloom=m.has_bloom_filter and not mv,
-                text_index=m.has_text_index
-                and not mv
-                and dt is DataType.STRING,
-                range_index=m.has_range_index
-                and not mv
-                and dt
-                in (
-                    DataType.INT,
-                    DataType.LONG,
-                    DataType.TIMESTAMP,
-                    DataType.FLOAT,
-                    DataType.DOUBLE,
-                ),
-                json_index=m.has_json_index
-                and not mv
-                and dt is DataType.STRING,
-                partition_config=partition_config,
-            )
-        )
+        for name in reader.column_names()
+    ]
     return write_segment(segment_dir, segment_name, table_name, specs)
-
-
-_INDEX_KINDS = ("inverted", "bloom", "range", "text", "json")
 
 
 def reindex_segment(
@@ -459,70 +420,25 @@ def reindex_segment(
     (table config gains an index, minions rebuild segments; the data is
     bit-identical, only the index set changes). All other columns keep
     their physical configuration; the target column keeps its encoding
-    and gains the requested index where valid (same validity matrix as
-    :func:`merge_segments`' index union).
+    and gains the requested index. An index the column cannot carry (the
+    validity matrix of :func:`merge_segments`' index union) raises
+    ValueError.
 
     Spark-free; orchestration (which segments, fan-out, commit) lives in
     maintenance.reindex_table."""
-    if index not in _INDEX_KINDS:
-        raise ValueError(f"unknown index kind: {index!r}")
     reader = SegmentReader.open(member_dir)
-    if reader.metadata.get_column(column) is None:
+    meta = reader.metadata.get_column(column)
+    if meta is None:
         raise ValueError(f"column not in segment: {column}")
-
-    specs = []
-    for name in reader.column_names():
-        m = reader.metadata.get_column(name)
-        dt = m.data_type
-        raw = not m.has_dictionary
-        mv = not m.is_single_value
-        values = _text_arrow(reader, name)
-        if values is None:
-            values = reader.read_column(name)
-        null_mask = (
-            reader.null_mask(name) if m.has_null_values else None
+    check_index(column, meta, index)
+    specs = [
+        _column_spec(
+            name,
+            [reader.metadata.get_column(name)],
+            _read_values([reader], name),
+            _read_null_mask([reader], name),
+            add_index=index if name == column else None,
         )
-        add = name == column
-        inverted = (m.has_inverted_index or (add and index == "inverted"))
-        bloom = m.has_bloom_filter or (add and index == "bloom")
-        text_index = m.has_text_index or (add and index == "text")
-        range_index = m.has_range_index or (add and index == "range")
-        json_index = m.has_json_index or (add and index == "json")
-        compression = (
-            LZ4_LENGTH_PREFIXED
-            if raw and dt in (DataType.STRING, DataType.BYTES)
-            else PASS_THROUGH
-        )
-        specs.append(
-            ColumnSpec(
-                name,
-                dt,
-                values,
-                raw=raw,
-                compression=compression,
-                multi_value=mv,
-                null_mask=null_mask,
-                inverted=inverted and not raw and not mv,
-                bloom=bloom and not mv,
-                text_index=text_index and not mv and dt is DataType.STRING,
-                range_index=range_index
-                and not mv
-                and dt
-                in (
-                    DataType.INT,
-                    DataType.LONG,
-                    DataType.TIMESTAMP,
-                    DataType.FLOAT,
-                    DataType.DOUBLE,
-                ),
-                json_index=json_index
-                and not mv
-                and dt is DataType.STRING,
-                partition_config=(
-                    (m.partition_function, m.num_partitions)
-                    if m.partition_function is not None
-                    else None
-                ),
-            )
-        )
+        for name in reader.column_names()
+    ]
     return write_segment(segment_dir, segment_name, table_name, specs)

@@ -93,16 +93,41 @@ def _bits_needed(cardinality: int) -> int:
     return max(1, math.ceil(math.log2(cardinality)) if cardinality > 1 else 1)
 
 
-def _is_sorted(values) -> bool:
-    if isinstance(values, np.ndarray):
-        return bool(np.all(values[:-1] <= values[1:])) if len(values) else True
-    return list(values) == sorted(values)
+def _is_sorted(values: np.ndarray) -> bool:
+    return bool(np.all(values[:-1] <= values[1:])) if len(values) else True
 
 
 def _cardinality(values) -> int:
     if isinstance(values, np.ndarray):
         return len(np.unique(values))
     return len(set(values))
+
+
+def _text_array(name: str, data_type: DataType, values, multi_value: bool):
+    """The STRING/BYTES value stream as one ``large_string`` /
+    ``large_binary`` array (chunks combined after the cast to 64-bit
+    offsets, so no payload size overflows). A NULL is refused: nullable
+    columns carry a fill value at null positions and the truth in
+    ``null_mask``."""
+    import pyarrow as pa
+
+    typ = pa.large_string() if data_type is DataType.STRING else pa.large_binary()
+    if multi_value:
+        values = [v for row in values for v in row]
+    if isinstance(values, pa.ChunkedArray):
+        arr = values.cast(typ).combine_chunks()
+    elif isinstance(values, pa.Array):
+        arr = values.cast(typ)
+    else:
+        if isinstance(values, np.ndarray):
+            values = values.tolist()  # numpy '<U' has no Arrow conversion
+        arr = pa.array(values, type=typ)
+    if arr.null_count:
+        raise ValueError(
+            f"column '{name}': {data_type.value} values must carry a fill "
+            "at null positions (like every nullable column here)"
+        )
+    return arr
 
 
 class ColumnSpec:
@@ -307,51 +332,23 @@ class ColumnSpec:
                     f"NaN in column '{name}': Pinot sorted dictionaries cannot "
                     "encode NaN (NaN is unordered); filter or canonicalize first"
                 )
-        # Arrow fast path (r14 optimization): single-value STRING/BYTES
-        # values may arrive as a pyarrow Array/ChunkedArray straight from
-        # the sink's record batches. The dictionary/var-byte encoders then
-        # work from the Arrow buffers (offsets + contiguous value bytes)
-        # with no per-value Python objects; every other consumer reads the
-        # ``values`` property, which materializes the Python list lazily
-        # and caches it. Output bytes are pinned identical to the list
-        # path by tests/test_writer_arrow.py.
+        # STRING/BYTES (BIG_DECIMAL's serialized bytes included) encode
+        # from ONE large_string/large_binary array over the value stream
+        # (multi-value rows flattened), built here from whatever the caller
+        # handed over: a list, an ndarray, or (single-value) a pyarrow
+        # Array/ChunkedArray straight from the sink's record batches. The dictionary/var-byte
+        # encoders, bloom, cardinality and dict-id steps then work from the
+        # Arrow buffers with no per-value Python objects; 64-bit offsets
+        # hold any column size. Other consumers read the ``values``
+        # property, which keeps a caller's list or materializes one lazily.
         self._arrow = None
         # set by _encode_dictionary (numeric/boolean ndarray path, r15):
         # the np.unique return_inverse ids, consumed once by write_segment
         self._dict_ids = None
-        if (
-            not multi_value
-            and decimal is None
-            and data_type in (DataType.STRING, DataType.BYTES)
-            and not fixed_length_dict
-        ):
-            try:
-                import pyarrow as pa
-            except ImportError:  # pragma: no cover - pyarrow is baked in
-                pa = None
-            if pa is not None and isinstance(
-                values, (pa.Array, pa.ChunkedArray)
-            ):
-                try:
-                    arr = (
-                        values.combine_chunks()
-                        if isinstance(values, pa.ChunkedArray)
-                        else values
-                    )
-                except pa.lib.ArrowInvalid:
-                    # r15 (ADVICE r14): >2 GiB of combined payload
-                    # overflows 32-bit string/binary offsets — fall back
-                    # to the list path, which handles any size
-                    arr = None
-                    values = values.to_pylist()
-                if arr is not None and arr.null_count:
-                    # callers fill nulls before handing values over (the
-                    # null_mask carries the truth); a null here is a
-                    # programming error on the fast path — fall back
-                    values = arr.to_pylist()
-                elif arr is not None:
-                    self._arrow = arr
-                    values = None
+        if data_type in (DataType.STRING, DataType.BYTES):
+            self._arrow = _text_array(name, data_type, values, multi_value)
+            if not multi_value and not isinstance(values, list):
+                values = None
         self.name = name
         self.data_type = data_type
         self._values = values
@@ -371,21 +368,15 @@ class ColumnSpec:
 
     @property
     def values(self):
-        """Per-doc values as Python objects; materialized (and cached) from
-        the Arrow array on first access when the fast path is active."""
-        if self._values is None and self._arrow is not None:
+        """Per-doc values as Python objects: the caller's list, or the text
+        column's Arrow array materialized (and cached) on first access."""
+        if self._values is None:
             self._values = self._arrow.to_pylist()
         return self._values
 
-    @values.setter
-    def values(self, v) -> None:
-        self._values = v
-        self._arrow = None
-        self._dict_ids = None
-
     def num_docs(self) -> int:
-        """Row count without materializing the Arrow fast path."""
-        if self._arrow is not None:
+        """Row count without materializing a text column's Arrow array."""
+        if self._values is None:
             return len(self._arrow)
         return len(self._values)
 
@@ -405,14 +396,12 @@ def _encode_dictionary(spec: ColumnSpec) -> tuple[bytes, list, int]:
     """Returns (blob, sorted_unique_values, length_of_each_entry). For
     multi-value columns the dictionary covers the flattened value stream."""
     if spec._arrow is not None:
-        # Arrow fast path: distincts come from one C pass; the sort runs
-        # over cardinality entries, not rows. Python's sort order equals
-        # byte order for both str (UTF-8 preserves code-point order) and
-        # bytes, so the dictionary is identical to the list path's.
+        # text: distincts come from one C pass; the sort runs over
+        # cardinality entries, not rows. Python's sort order equals byte
+        # order for both str (UTF-8 preserves code-point order) and bytes.
         import pyarrow.compute as pc
 
-        vals = pc.unique(spec._arrow).to_pylist()
-        uniq = sorted(vals)
+        uniq = sorted(pc.unique(spec._arrow).to_pylist())
     else:
         vals = spec.flat_values()
         if isinstance(vals, np.ndarray):
@@ -423,15 +412,9 @@ def _encode_dictionary(spec: ColumnSpec) -> tuple[bytes, list, int]:
             # with tools/profile_writer.py — since removed, in git history
             # at f12fd1e) and inverse ids are 4.5x cheaper at that shape.
             # ids identical to searchsorted by definition (index of each
-            # value in the sorted unique array). Only the numeric/boolean
-            # branch of write_segment consumes them, so only those specs
-            # keep them.
+            # value in the sorted unique array).
             uniq, inverse = np.unique(vals, return_inverse=True)
-            if (
-                spec.data_type in _BE_DTYPES
-                or spec.data_type is DataType.BOOLEAN
-            ):
-                spec._dict_ids = inverse.astype(np.int64, copy=False)
+            spec._dict_ids = inverse.astype(np.int64, copy=False)
         else:
             uniq = sorted(set(vals))
     out = bytearray(_DICT_MAGIC)
@@ -447,7 +430,6 @@ def _encode_dictionary(spec: ColumnSpec) -> tuple[bytes, list, int]:
         # layout — see dictionary.py; NUL-padded fixed-length is refused in
         # ColumnSpec.__init__).
         for e in uniq:
-            e = bytes(e)
             out += len(e).to_bytes(4, "big") + e
     else:  # STRING
         encoded = [v.encode("utf-8") for v in uniq]
@@ -490,63 +472,31 @@ def _encode_raw_numeric(spec: ColumnSpec) -> bytes:
 
 
 def _encode_var_byte(spec: ColumnSpec) -> bytes:
-    """V4 var-byte chunk forward index for a RAW STRING/BYTES column."""
-    if spec._arrow is not None:
-        # Arrow fast path: a string/binary array already IS (offsets,
-        # contiguous value bytes), so each chunk is a slice of the data
-        # buffer plus a rebased offset table — no per-value Python
-        # objects anywhere. Byte-identical to the list path (pinned by
-        # tests/test_writer_arrow.py).
-        import pyarrow as pa
+    """V4 var-byte chunk forward index for a RAW STRING/BYTES column. A
+    string/binary array already IS (offsets, contiguous value bytes), so
+    each chunk is a slice of the data buffer plus a rebased offset table."""
+    import pyarrow as pa
 
-        arr = spec._arrow.cast(pa.large_binary())
-        # a sliced array keeps absolute offsets into the shared data
-        # buffer, so indexing the offsets window by arr.offset is the only
-        # offset handling needed
-        offs_np = np.frombuffer(arr.buffers()[1], dtype=np.int64)[
-            arr.offset : arr.offset + len(arr) + 1
-        ]
-        data_mv = memoryview(arr.buffers()[2] or b"")
-        n_docs = len(arr)
-        lens = np.diff(offs_np)
+    arr = spec._arrow.cast(pa.large_binary())
+    # a sliced array keeps absolute offsets into the shared data buffer, so
+    # indexing the offsets window by arr.offset is the only offset handling
+    # needed
+    offs_np = np.frombuffer(arr.buffers()[1], dtype=np.int64)[
+        arr.offset : arr.offset + len(arr) + 1
+    ]
+    data_mv = memoryview(arr.buffers()[2] or b"")
+    n_docs = len(arr)
+    lens = np.diff(offs_np)
 
-        def payload(k: int) -> bytes:
-            return bytes(data_mv[offs_np[k] : offs_np[k + 1]])
-
-        def chunk_bytes(i: int, j: int) -> bytes:
-            num = j - i
-            base = 4 + 4 * num
-            offs = (base + (offs_np[i:j] - offs_np[i])).astype("<u4")
-            return (
-                num.to_bytes(4, "little")
-                + offs.tobytes()
-                + bytes(data_mv[offs_np[i] : offs_np[j]])
-            )
-
-    else:
-        if spec.data_type is DataType.BYTES:
-            payloads = [bytes(v) for v in spec.values]
-        else:
-            payloads = [v.encode("utf-8") for v in spec.values]
-        n_docs = len(payloads)
-        lens = np.fromiter(
-            (len(p) for p in payloads), dtype=np.int64, count=n_docs
+    def chunk_bytes(i: int, j: int) -> bytes:
+        num = j - i
+        base = 4 + 4 * num
+        offs = (base + (offs_np[i:j] - offs_np[i])).astype("<u4")
+        return (
+            num.to_bytes(4, "little")
+            + offs.tobytes()
+            + bytes(data_mv[offs_np[i] : offs_np[j]])
         )
-
-        def payload(k: int) -> bytes:
-            return payloads[k]
-
-        def chunk_bytes(i: int, j: int) -> bytes:
-            num = j - i
-            base = 4 + 4 * num
-            offs = (
-                base + np.concatenate(([0], np.cumsum(lens[i : j - 1])))
-            ).astype("<u4")
-            return (
-                num.to_bytes(4, "little")
-                + offs.tobytes()
-                + b"".join(payloads[i:j])
-            )
 
     # Split docs into chunks; any value whose payload alone exceeds the target
     # becomes a huge-value chunk of its own (high docId bit set).
@@ -564,7 +514,7 @@ def _encode_var_byte(spec: ColumnSpec) -> bytes:
     i = 0
     while i < n_docs:
         if lens[i] > target:
-            chunks.append((i, True, payload(i)))
+            chunks.append((i, True, bytes(data_mv[offs_np[i] : offs_np[i + 1]])))
             i += 1
             continue
         j = int(
@@ -716,23 +666,26 @@ def write_segment(
             return
         from pinot_segment import bloom as bloom_mod
 
-        if distinct_values is None:
-            if spec._arrow is not None and spec.null_mask is None:
+        if spec._arrow is not None:
+            if distinct_values is None or spec.null_mask is not None:
+                # text: the non-null distincts from one C pass
+                import pyarrow as pa
                 import pyarrow.compute as pc
 
-                distinct_values = pc.unique(spec._arrow).to_pylist()
-            else:
-                vals = spec.values
+                arr = spec._arrow
                 if spec.null_mask is not None:
-                    vals = [
-                        v
-                        for v, is_null in zip(vals, spec.null_mask)
-                        if not is_null
-                    ]
-                if isinstance(vals, np.ndarray):
-                    distinct_values = np.unique(vals)
-                else:
-                    distinct_values = set(vals)
+                    arr = arr.filter(pa.array(~spec.null_mask))
+                distinct_values = pc.unique(arr).to_pylist()
+        elif distinct_values is None:
+            vals = spec.values
+            if spec.null_mask is not None:
+                vals = [
+                    v for v, is_null in zip(vals, spec.null_mask) if not is_null
+                ]
+            if isinstance(vals, np.ndarray):
+                distinct_values = np.unique(vals)
+            else:
+                distinct_values = set(vals)
         elif spec.null_mask is not None:
             # dictionary path: the sorted dictionary includes the fill value
             # at null positions; drop values that appear ONLY as fills
@@ -910,13 +863,12 @@ def write_segment(
         # never recomputes a distinct pass over the values
         spec._dict_cardinality = len(uniq)
         if spec._arrow is not None:
-            # Arrow fast path: ids from one hash-probe C pass against the
-            # sorted dictionary (exact binary equality — NUL-safe, unlike
-            # numpy '<U' probes)
+            # text: ids from one hash-probe C pass against the sorted
+            # dictionary (exact binary equality — NUL-safe, unlike numpy
+            # '<U' probes); multi-value columns probe their flat stream
             import pyarrow as pa
             import pyarrow.compute as pc
 
-            n_flat = len(spec._arrow)
             dict_ids = (
                 pc.index_in(
                     spec._arrow,
@@ -925,36 +877,21 @@ def write_segment(
                 .to_numpy(zero_copy_only=False)
                 .astype(np.int64)
             )
-        elif spec.data_type in _BE_DTYPES or spec.data_type is DataType.BOOLEAN:
-            flat = spec.flat_values()
-            n_flat = len(flat)
-            inverse_ids = getattr(spec, "_dict_ids", None)
-            spec._dict_ids = None  # consume once; never reuse stale ids
-            if inverse_ids is not None:
-                # ids fell out of _encode_dictionary's np.unique
-                # return_inverse pass (r15) — skip the second probe
-                dict_ids = inverse_ids
-            else:
-                # value → dictId via binary search on the sorted
-                # dictionary (MV columns: flat is a Python list)
-                native = (
-                    np.dtype(bool)
-                    if spec.data_type is DataType.BOOLEAN
-                    else np.dtype(_BE_DTYPES[spec.data_type]).newbyteorder("=")
-                )
-                uniq_arr = np.asarray(uniq, dtype=native)
-                dict_ids = np.searchsorted(
-                    uniq_arr, np.asarray(flat, dtype=native)
-                )
+        elif spec._dict_ids is not None:
+            # ids fell out of _encode_dictionary's np.unique return_inverse
+            # pass (r15) — skip the second probe; consume once, never reuse
+            dict_ids, spec._dict_ids = spec._dict_ids, None
         else:
-            flat = spec.flat_values()
-            n_flat = len(flat)
-            # STRING/BYTES: numpy '<U' arrays silently strip trailing U+0000,
-            # so a searchsorted probe maps '\x00' → '' (wrong id). A plain
-            # Python dict lookup is exact for all code points / payloads.
-            idx = {v: i for i, v in enumerate(uniq)}
-            dict_ids = np.fromiter(
-                (idx[v] for v in flat), dtype=np.int64, count=len(flat)
+            # value → dictId via binary search on the sorted dictionary
+            # (MV columns: the flat stream is a Python list)
+            native = (
+                np.dtype(bool)
+                if spec.data_type is DataType.BOOLEAN
+                else np.dtype(_BE_DTYPES[spec.data_type]).newbyteorder("=")
+            )
+            dict_ids = np.searchsorted(
+                np.asarray(uniq, dtype=native),
+                np.asarray(spec.flat_values(), dtype=native),
             )
         bits = _bits_needed(len(uniq))
         if spec.multi_value:
@@ -1001,7 +938,7 @@ def write_segment(
             # sortedness via the dict ids: the dictionary is sorted
             # ascending, so doc order over VALUES is non-decreasing iff it
             # is over ids — an O(n) int compare that never materializes
-            # the Arrow fast path's Python values
+            # a text column's Python values
             f"column.{spec.name}.isSorted="
             + (
                 "true"
@@ -1017,7 +954,7 @@ def write_segment(
             max_mv = max((len(row) for row in spec.values), default=0)
             meta_lines += [
                 f"column.{spec.name}.isSingleValue=false",
-                f"column.{spec.name}.totalNumberOfEntries={len(flat)}",
+                f"column.{spec.name}.totalNumberOfEntries={len(dict_ids)}",
                 f"column.{spec.name}.maxNumberOfMultiValues={max_mv}",
             ]
         if spec.null_mask is not None and spec.data_type in _BE_DTYPES:

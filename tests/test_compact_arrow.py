@@ -1,11 +1,13 @@
-"""Byte-identity of the compaction Arrow text path (r14 optimization).
+"""Byte-identity of the compaction kernels with the writer.
 
 ``pinot_segment.compact`` moves single-value null-free STRING/BYTES
 columns from reader to writer as Arrow arrays (no per-value Python
-objects). These tests pin that the produced segments are byte-for-byte
-identical to the historical read_column list path, across merge, filter
-and reindex, for dictionary and RAW encodings, with indexes, nullable
-and multi-value columns present as fallback exercisers.
+objects) and everything else through read_column. These tests pin that
+merge, filter and reindex each produce a segment byte-for-byte identical
+to ``write_segment`` of the same logical columns given as Python lists —
+the concatenated members, the masked rows, or one added index — for
+dictionary and RAW encodings, with indexes, a nullable column (whose
+"FILL" values must survive) and a multi-value column present.
 """
 
 import numpy as np
@@ -19,39 +21,57 @@ from pinot_segment.writer import ColumnSpec, write_segment
 N = 2000
 
 
-def _member(tmp_path, i):
+def _columns(i):
+    """Member ``i``'s logical columns as Python lists / numpy arrays."""
     rng = np.random.RandomState(i)
-    strs = [f"val_{rng.randint(0, 150)}" for _ in range(N)]
-    raws = ["x" * rng.randint(0, 40) + str(j) for j in range(N)]
-    byts = [
-        bytes(rng.randint(0, 256, rng.randint(1, 24), dtype=np.uint8).tolist())
-        for _ in range(N)
-    ]
     nulls = rng.rand(N) < 0.1
-    nstrs = ["FILL" if m else s for s, m in zip(strs, nulls)]
-    key = np.sort(rng.randint(i * 10_000, (i + 1) * 10_000, N)).astype(np.int64)
-    specs = [
-        ColumnSpec("key", DataType.LONG, key),
-        ColumnSpec("dstr", DataType.STRING, strs, inverted=True, bloom=True),
+    strs = [f"val_{rng.randint(0, 150)}" for _ in range(N)]
+    return {
+        "key": np.sort(
+            rng.randint(i * 10_000, (i + 1) * 10_000, N)
+        ).astype(np.int64),
+        "dstr": strs,
+        "rstr": ["x" * rng.randint(0, 40) + str(j) for j in range(N)],
+        "b": [
+            bytes(rng.randint(0, 256, rng.randint(1, 24), dtype=np.uint8).tolist())
+            for _ in range(N)
+        ],
+        "nstr": ["FILL" if m else s for s, m in zip(strs, nulls)],
+        "nulls": nulls,
+        "mvs": [[f"t{j % 7}", f"u{j % 3}"] for j in range(N)],
+    }
+
+
+def _specs(c, text_index=False):
+    return [
+        ColumnSpec("key", DataType.LONG, c["key"]),
+        ColumnSpec(
+            "dstr",
+            DataType.STRING,
+            c["dstr"],
+            inverted=True,
+            bloom=True,
+            text_index=text_index,
+        ),
         ColumnSpec(
             "rstr",
             DataType.STRING,
-            raws,
+            c["rstr"],
             raw=True,
             compression=LZ4_LENGTH_PREFIXED,
         ),
         ColumnSpec(
-            "b", DataType.BYTES, byts, raw=True, compression=LZ4_LENGTH_PREFIXED
+            "b", DataType.BYTES, c["b"], raw=True, compression=LZ4_LENGTH_PREFIXED
         ),
-        ColumnSpec("nstr", DataType.STRING, nstrs, null_mask=nulls),
-        ColumnSpec(
-            "mvs",
-            DataType.STRING,
-            [[f"t{j % 7}", f"u{j % 3}"] for j in range(N)],
-            multi_value=True,
-        ),
+        ColumnSpec("nstr", DataType.STRING, c["nstr"], null_mask=c["nulls"]),
+        ColumnSpec("mvs", DataType.STRING, c["mvs"], multi_value=True),
     ]
-    return str(write_segment(tmp_path / f"m{i}", f"seg_{i}", "tbl", specs))
+
+
+def _member(tmp_path, i):
+    return str(
+        write_segment(tmp_path / f"m{i}", f"seg_{i}", "tbl", _specs(_columns(i)))
+    )
 
 
 @pytest.fixture()
@@ -70,41 +90,46 @@ def _assert_identical(a, b):
         assert (fa / name).read_bytes() == (fb / name).read_bytes(), name
 
 
-def _ab(monkeypatch, fn):
-    monkeypatch.setattr(compact, "_ARROW_TEXT", True)
-    arrow = fn("arrow")
-    monkeypatch.setattr(compact, "_ARROW_TEXT", False)
-    listp = fn("list")
-    _assert_identical(arrow, listp)
+def _take(c, keep):
+    """The logical columns restricted to rows where ``keep`` is True."""
+    idx = np.flatnonzero(keep)
+    return {
+        k: v[keep] if isinstance(v, np.ndarray) else [v[i] for i in idx]
+        for k, v in c.items()
+    }
 
 
-def test_merge_arrow_matches_list_path(tmp_path, members, monkeypatch):
-    _ab(
-        monkeypatch,
-        lambda tag: compact.merge_segments(
-            members, tmp_path / tag / "m", "merged", "tbl"
-        ),
-    )
+def test_merge_arrow_matches_list_path(tmp_path, members):
+    parts = [_columns(i) for i in range(3)]
+    whole = {
+        k: np.concatenate([p[k] for p in parts])
+        if isinstance(parts[0][k], np.ndarray)
+        else [v for p in parts for v in p[k]]
+        for k in parts[0]
+    }
+    want = write_segment(tmp_path / "want", "merged", "tbl", _specs(whole))
+    got = compact.merge_segments(members, tmp_path / "m", "merged", "tbl")
+    _assert_identical(got, want)
 
 
-def test_filter_arrow_matches_list_path(tmp_path, members, monkeypatch):
+def test_filter_arrow_matches_list_path(tmp_path, members):
     mask = np.zeros(N, dtype=bool)
     mask[::3] = True
-    _ab(
-        monkeypatch,
-        lambda tag: compact.filter_segment(
-            members[0], tmp_path / tag / "f", "filt", "tbl", mask
-        ),
+    want = write_segment(
+        tmp_path / "want", "filt", "tbl", _specs(_take(_columns(0), mask))
     )
+    got = compact.filter_segment(members[0], tmp_path / "f", "filt", "tbl", mask)
+    _assert_identical(got, want)
 
 
-def test_reindex_arrow_matches_list_path(tmp_path, members, monkeypatch):
-    _ab(
-        monkeypatch,
-        lambda tag: compact.reindex_segment(
-            members[1], tmp_path / tag / "r", "re", "tbl", "dstr", "text"
-        ),
+def test_reindex_arrow_matches_list_path(tmp_path, members):
+    want = write_segment(
+        tmp_path / "want", "re", "tbl", _specs(_columns(1), text_index=True)
     )
+    got = compact.reindex_segment(
+        members[1], tmp_path / "r", "re", "tbl", "dstr", "text"
+    )
+    _assert_identical(got, want)
 
 
 def test_rollup_keeps_list_path(tmp_path, monkeypatch):
@@ -132,22 +157,6 @@ def test_rollup_keeps_list_path(tmp_path, monkeypatch):
     r = SegmentReader.open(out)
     assert r.read_column("d") == ["a", "b"]
     assert r.read_column("m").tolist() == [4, 6]
-
-
-def test_merge_overflow_cap_falls_back_to_list_path(
-    tmp_path, members, monkeypatch
-):
-    """r15 (ADVICE r14): merged text columns whose Arrow pieces would
-    exceed the 32-bit offset cap take the list path — same bytes out."""
-    monkeypatch.setattr(compact, "_ARROW_TEXT_MAX_BYTES", 1)  # force it
-    capped = compact.merge_segments(
-        members, tmp_path / "capped" / "m", "merged", "tbl"
-    )
-    monkeypatch.setattr(compact, "_ARROW_TEXT", False)
-    listp = compact.merge_segments(
-        members, tmp_path / "list2" / "m", "merged", "tbl"
-    )
-    _assert_identical(capped, listp)
 
 
 def test_merge_nullable_late_member_skips_all_arrow_decodes(
@@ -203,3 +212,64 @@ def test_merge_nullable_late_member_skips_all_arrow_decodes(
     )
     assert "dstr" not in calls  # nullable in ONE member -> zero decodes
     assert calls.count("always") == 2  # eligible column still fast-paths
+
+
+@pytest.mark.parametrize(
+    "column,index",
+    [
+        ("k", "text"),
+        ("k", "json"),
+        ("s", "range"),
+        ("r", "inverted"),
+        ("mv", "bloom"),
+    ],
+)
+def test_reindex_invalid_index_raises(tmp_path, column, index):
+    """An index the column cannot carry is an error naming the column and
+    the index kind — not a rewritten segment silently without it."""
+    seg = write_segment(
+        tmp_path / "s",
+        "s",
+        "tbl",
+        [
+            ColumnSpec("k", DataType.LONG, np.arange(4, dtype=np.int64)),
+            ColumnSpec("s", DataType.STRING, ["a", "b", "a", "c"]),
+            ColumnSpec("r", DataType.STRING, ["w", "x", "y", "z"], raw=True),
+            ColumnSpec("mv", DataType.INT, [[1], [2, 3], [], [4]], multi_value=True),
+        ],
+    )
+    with pytest.raises(ValueError, match=f"'{column}'.*{index}"):
+        compact.reindex_segment(str(seg), tmp_path / "out", "o", "tbl", column, index)
+    assert not (tmp_path / "out").exists()
+
+
+def test_merge_big_decimal_matches_write_segment(tmp_path):
+    """BIG_DECIMAL columns (dictionary with nulls, and RAW) merge into the
+    segment write_segment makes of the concatenated decimals."""
+    from decimal import Decimal
+
+    def specs(dvals, nulls, rvals):
+        return [
+            ColumnSpec(
+                "d", DataType.BIG_DECIMAL, dvals, decimal=(6, 2), null_mask=nulls
+            ),
+            ColumnSpec(
+                "r",
+                DataType.BIG_DECIMAL,
+                rvals,
+                decimal=(6, 2),
+                raw=True,
+                compression=LZ4_LENGTH_PREFIXED,
+            ),
+        ]
+
+    d = [Decimal(v) for v in ("1.50", "0", "-3.25", "7.00", "0", "1.50")]
+    nulls = np.array([False, True, False, False, True, False])
+    r = [Decimal(v) for v in ("9.99", "-0.01", "12.30", "0.00", "5.55", "1.00")]
+    members = [
+        str(write_segment(tmp_path / f"m{i}", f"m{i}", "tbl", specs(d[s], nulls[s], r[s])))
+        for i, s in enumerate((slice(0, 2), slice(2, 6)))
+    ]
+    want = write_segment(tmp_path / "want", "merged", "tbl", specs(d, nulls, r))
+    got = compact.merge_segments(members, tmp_path / "m", "merged", "tbl")
+    _assert_identical(got, want)

@@ -491,3 +491,49 @@ def test_merge_preserves_text_and_range_indexes(tmp_path):
     truth = (vals >= 4) & (vals <= 10)
     assert not (definite & ~truth).any()
     assert not (truth & ~(definite | cand)).any()
+
+
+def test_compact_table_failed_merge_leaves_table_unchanged(spark, tmp_path):
+    """A merge that raises inside its Spark task (members with different
+    column sets) fails compact_table before any rename: the segment set,
+    the manifest, the row count and verify_table all stay as they were."""
+    from datafusion_pinot_spark.maintenance import compact_table
+    from pinot_segment.manifest import refresh_manifest
+    from pinot_segment.verify import verify_table
+
+    table = tmp_path / "tbl_OFFLINE"
+    _seg(table, "s0", 0, 10)
+    write_segment(
+        table / "s1",
+        "s1",
+        "t",
+        [ColumnSpec("k", DataType.LONG, np.arange(10, 25, dtype=np.int64))],
+    )
+    refresh_manifest(str(table))
+    manifest = (table / "segment_stats.json").read_bytes()
+
+    def segments():
+        return sorted(p.name for p in table.iterdir() if (p / "v3").is_dir())
+
+    with pytest.raises(Exception, match="different columns"):
+        compact_table(spark, str(table), target_docs=100)
+    assert segments() == ["s0", "s1"]
+    assert (table / "segment_stats.json").read_bytes() == manifest
+    rows = sum(
+        SegmentReader.open(str(table / s / "v3")).total_docs() for s in segments()
+    )
+    assert rows == 25
+    assert all(not findings for findings in verify_table(str(table)).values())
+
+
+@pytest.mark.parametrize("column,index", [("k", "text"), ("lang", "range")])
+def test_reindex_table_rejects_invalid_index_on_driver(tmp_path, column, index):
+    """The validity check runs over the triage metadata before any Spark
+    task is planned (``spark=None`` would fail at fan-out)."""
+    from datafusion_pinot_spark.maintenance import reindex_table
+
+    table = tmp_path / "tbl_OFFLINE"
+    _seg(table, "s0", 0, 10)
+    with pytest.raises(ValueError, match=f"'{column}'.*{index}"):
+        reindex_table(None, str(table), column, index)
+    assert sorted(p.name for p in table.iterdir()) == ["s0"]

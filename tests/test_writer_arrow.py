@@ -1,11 +1,12 @@
-"""Pins the writer's Arrow fast path (r14 optimization) to the list path.
+"""Pins the writer's text input forms to each other.
 
-ColumnSpec accepts a pyarrow Array/ChunkedArray for single-value
-STRING/BYTES columns and encodes dictionaries / V4 var-byte chunks straight
-from the Arrow buffers. These tests prove the emitted segment is
-byte-identical to the historical list-of-Python-values path for every
-affected encoder branch, so the fast path can never drift from the format
-the reader (and the frozen fixtures) pin down.
+ColumnSpec accepts a list, an ndarray, or a pyarrow Array/ChunkedArray for
+STRING/BYTES columns and turns each into one large_string/large_binary
+array that the dictionary / V4 var-byte encoders read straight from the
+Arrow buffers. These tests prove a list input and an Arrow input emit
+byte-identical segments for every affected encoder branch, so the format
+the reader (and the frozen fixtures) pin down cannot drift with the input
+form.
 """
 
 import numpy as np
@@ -119,19 +120,60 @@ def test_indexed_column_identity(tmp_path):
     assert a == b
 
 
-def test_arrow_nulls_fall_back_to_list_path():
-    spec = ColumnSpec("s", DataType.STRING, pa.array(["a", None, "b"]))
-    assert spec._arrow is None  # nulls → materialized list, not fast path
-    assert spec.values == ["a", None, "b"]
+@pytest.mark.parametrize("raw", [False, True], ids=["dict", "raw"])
+@pytest.mark.parametrize(
+    "dt,values",
+    [
+        (DataType.STRING, ["a", None, "b"]),
+        (DataType.STRING, pa.array(["a", None, "b"])),
+        (DataType.BYTES, [b"a", None, b"b"]),
+        (DataType.BYTES, pa.chunked_array([[b"a"], [None, b"b"]])),
+    ],
+    ids=["string-list", "string-array", "bytes-list", "bytes-chunked"],
+)
+def test_text_null_raises_clear_error(dt, values, raw):
+    """A NULL in text values is refused up front, worded like the
+    BIG_DECIMAL fill message (nullable columns carry a fill value and the
+    truth in null_mask), not deep in the dictionary/var-byte encoders."""
+    with pytest.raises(ValueError, match="'s'.*must carry a fill"):
+        ColumnSpec("s", dt, values, raw=raw)
+
+
+def test_multi_value_text_null_raises_clear_error():
+    with pytest.raises(ValueError, match="'m'.*must carry a fill"):
+        ColumnSpec("m", DataType.STRING, [["a"], ["b", None]], multi_value=True)
+
+
+@pytest.mark.parametrize(
+    "values",
+    [
+        list(STRINGS),
+        pa.array(STRINGS, type=pa.string()),
+        pa.chunked_array([STRINGS[:3], STRINGS[3:]], type=pa.string()),
+    ],
+    ids=["list", "array", "chunked"],
+)
+def test_text_array_has_64_bit_offsets(values):
+    """Every text value stream becomes ONE large_string array, so no
+    column payload can overflow 32-bit offsets."""
+    spec = ColumnSpec("s", DataType.STRING, values)
+    assert spec._arrow.type == pa.large_string()
+    assert isinstance(spec._arrow, pa.Array)
+    assert spec._arrow.to_pylist() == STRINGS
+    mv = ColumnSpec("m", DataType.STRING, [["x"], [], ["y", "z"]], multi_value=True)
+    assert mv._arrow.type == pa.large_string() and len(mv._arrow) == 3
+    assert mv.num_docs() == 3
+    dec = ColumnSpec("d", DataType.BIG_DECIMAL, ["1.5"], decimal=(4, 1))
+    assert dec._arrow.type == pa.large_binary()
 
 
 def test_values_property_materializes_lazily():
     spec = ColumnSpec("s", DataType.STRING, pa.array(STRINGS))
-    assert spec._arrow is not None
+    assert spec._values is None
     assert spec.num_docs() == len(STRINGS)
     assert spec.values == STRINGS  # lazy materialization for any consumer
-    spec.values = ["replaced"]  # setter drops the arrow path
-    assert spec._arrow is None and spec.num_docs() == 1
+    listed = list(STRINGS)
+    assert ColumnSpec("s", DataType.STRING, listed).values is listed
 
 
 def test_specs_stats_parity(tmp_path):

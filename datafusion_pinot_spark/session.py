@@ -13,6 +13,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """The driver heap ``get_spark`` asks for: half of physical memory,
+    capped at 48g (at least 1g), unless ``SPARK_GRAFT_DRIVER_MEM`` names
+    one. A fixed 48g on a small host leaves the kernel, not the heap, as
+    the limit: two sessions at once can then be OOM-killed."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(48, total // (2 << 30)))}g"
+
+
 def get_spark(
     app_name: str = "datafusion_pinot_spark",
     cpus: int | None = None,
@@ -35,7 +47,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -4,11 +4,17 @@ Spark-side equivalent of the reference's DataFusion integration
 (reference datafusion-pinot/src/table.rs + exec.rs), re-expressed on the
 PySpark 4 Data Source API:
 
-- one ``InputPartition`` per segment directory by default — the segment is
-  the unit of parallelism, as in the reference (exec.rs:41
-  ``num_partitions = segments.len()``); the ``segments_per_partition``
-  option packs N segments (or ``auto``: a manifest doc-count target) per
-  task, and an unfiltered COUNT(*) packs on its own;
+- planning happens on the driver and plans only the tasks a query needs:
+  segments are pruned by manifest zone and partition maps, then by bloom
+  filter (the driver opens only segments whose manifest marks the probed
+  column as bloomed), then by head/tail; the survivors are packed into
+  contiguous tasks by manifest doc count, about two tasks per planning
+  CPU (the reference runs one partition per segment, exec.rs:41
+  ``num_partitions = segments.len()``, which on Spark pays a Python task
+  per segment). Segments without fresh manifest stats get a task each;
+  ``segments_per_partition=N`` packs N per task instead, and an unfiltered
+  COUNT(*) packs on its own. ``explain_scan`` reports the same plan's
+  counts;
 - table schema derived from the *first* segment's metadata (table.rs:115-118),
   in metadata-declared column order (deterministic — fixes the reference's
   HashMap-order hazard, SURVEY.md §4.3), nullable where any segment holds
@@ -257,15 +263,16 @@ class ScanSpec:
 class PinotInputPartition(InputPartition):
     """One Spark task's worth of segments.
 
-    Default is one segment per partition — the reference's granularity
-    (table.rs: one DataFusion partition per segment), and the right one when
-    segments are production-sized (hundreds of MB: it is then exactly
-    Spark's file-split granularity). Tables made of many small segments
-    (frequent small ingests) pack several segments per task via the
-    ``segments_per_partition`` read option, amortizing the per-task
-    scheduling + Python-worker handoff cost the same way Spark's file
-    sources coalesce small files into one split. What to read from them is
-    the reader's ``ScanSpec``."""
+    By default the planner packs contiguous surviving segments up to a
+    doc-count target sized so a scan runs about two tasks per planning CPU
+    (capped at ``_AUTO_DOCS_PER_TASK``): production-sized segments still
+    get a task each — the reference's granularity (table.rs: one
+    DataFusion partition per segment) — while many small segments share a
+    task, amortizing the per-task scheduling + Python-worker cost the way
+    Spark's file sources coalesce small files into one split. Segments
+    without fresh manifest stats get a task each. The
+    ``segments_per_partition`` read option fixes N segments per task
+    instead. What to read from them is the reader's ``ScanSpec``."""
 
     segment_dirs: tuple[str, ...]
     # CDC stream tag ('insert' / 'delete') when the partition belongs to a
@@ -276,6 +283,52 @@ class PinotInputPartition(InputPartition):
 def _groups(items: list, n: int) -> list:
     """Consecutive groups of n."""
     return [items[i : i + n] for i in range(0, len(items), n)]
+
+
+def _planning_cpus() -> int:
+    """CPUs the planning process may run on. Under ``local[N]`` on one
+    host this is the executors' CPU count; on a cluster it is only a
+    heuristic for the scan's parallelism."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no sched_getaffinity on this platform
+        return os.cpu_count() or 1
+
+
+def _doc_count_groups(survivors: list, stats: dict, cap: int) -> list:
+    """Greedy contiguous groups of at most a target doc count each (one
+    larger segment alone), the target being ``ceil(docs / (2 * cpus))``
+    capped at ``cap``. A segment without stats counts as a full target,
+    so it gets a group of its own."""
+    known = sum(int(st["total_docs"]) for st in map(stats.get, survivors) if st)
+    target = min(cap, max(1, -(-known // (2 * _planning_cpus()))))
+    groups: list = []
+    docs = 0
+    for seg in survivors:
+        st = stats.get(seg)
+        seg_docs = int(st["total_docs"]) if st else target
+        if not groups or docs + seg_docs > target:
+            groups.append([])
+            docs = 0
+        groups[-1].append(seg)
+        docs += seg_docs
+    return groups
+
+
+@dataclass(frozen=True)
+class ScanPlan:
+    """A batch scan's tasks as segment groups, and how many segments each
+    pruning step dropped (keys of ``PRUNE_STEPS``)."""
+
+    groups: tuple
+    pruned: dict
+
+    PRUNE_STEPS = ("zone_map", "partition_map", "bloom", "head_tail")
+
+    def partitions(self) -> list:
+        # All segments pruned: Spark still schedules one task for an empty
+        # partitions list (passing None), so hand it an empty sentinel.
+        return [PinotInputPartition(g) for g in self.groups or ((),)]
 
 
 class PinotDataSource(DataSource):
@@ -374,7 +427,7 @@ class PinotDataSource(DataSource):
                 "for a one-shot diff between two snapshots use "
                 "maintenance.changes_between"
             )
-        raw = self.options.get("segments_per_partition", "1") or "1"
+        raw = self.options.get("segments_per_partition") or "auto"
         if self.options.get("stats_column") and not self._flag("segment_stats"):
             # Without this a misspelled/false-valued segment_stats option
             # silently degrades to a full data scan with no min/max columns.
@@ -388,7 +441,7 @@ class PinotDataSource(DataSource):
                 "mutually exclusive"
             )
         if raw == "auto":
-            spp = 0  # sentinel: manifest-driven packing at partitions() time
+            spp = None  # doc-count packing at partitions() time
         else:
             spp = int(raw)
             if spp < 1:
@@ -596,7 +649,7 @@ class PinotDataSourceReader(DataSourceReader):
         self,
         schema: StructType,
         segments: list[str],
-        segments_per_partition: int = 1,
+        segments_per_partition: "int | None" = None,
         probes: tuple = (),
         head: "tuple[str, int] | None" = None,
         tail: "tuple[str, int] | None" = None,
@@ -708,13 +761,6 @@ class PinotDataSourceReader(DataSourceReader):
 
     # -- planning -----------------------------------------------------------
 
-    # A metadata-only COUNT(*) task just parses metadata.properties per
-    # segment (~0.2 ms each, no column decode), so pack several segments per
-    # task: per-task overhead otherwise dominates a query whose real work is
-    # microseconds. Not unbounded, though — Spark still iterates the
-    # zero-column rows to count them, and that iteration parallelizes across
-    # tasks (measured on a 64-segment/4.8M-row table: 1 task 1.10 s,
-    # 8 tasks 0.45 s, 32 tasks 0.64 s — 8 won).
     # Metadata-only COUNT(*) packing. Per-segment work on this path is a
     # manifest lookup (or one small properties parse on fallback) — tens
     # of microseconds — so packing trades per-task dispatch against
@@ -729,68 +775,66 @@ class PinotDataSourceReader(DataSourceReader):
     _COUNT_PACK = 8
     _COUNT_TASKS_TARGET = 32
 
-    # Target decoded docs per task for `segments_per_partition=auto` — a
-    # few hundred MB of decoded columns at typical widths, large enough to
-    # amortize the per-task Python-worker hand-off, small enough to fit
-    # executor memory and parallelize a medium table.
+    # Cap on the default packing's docs per task — a few hundred MB of
+    # decoded columns at typical widths, small enough to fit executor
+    # memory. Below the cap the target is the surviving docs over twice
+    # the planning CPUs, because every Python data-source task costs
+    # ~0.25 s of executor CPU whatever it reads (measured on a 4-core
+    # host): there 64 segments of 1,000 docs plan 8 tasks instead of 64,
+    # while 8 segments of 50,000 docs still plan 8.
     _AUTO_DOCS_PER_TASK = 4_000_000
 
     def partitions(self) -> list[PinotInputPartition]:
-        # Zone-map prune first (per segment — pruning granularity is
-        # unaffected by packing), then the head/tail cuts, then pack the
-        # survivors into tasks. Stats come from the table-level
-        # segment_stats.json manifest when fresh — ONE file read per table
-        # dir instead of a SegmentReader.open per segment, which is the
-        # difference between O(1) and O(segments) driver-side planning at
-        # 10^5-segment scale; segments the manifest doesn't cover fall back
-        # to the per-segment open.
+        return self._plan().partitions()
+
+    def _plan(self) -> ScanPlan:
+        """Prune, then pack. Pruning is per segment (its granularity is
+        unaffected by packing): zone and partition maps, then bloom
+        filters, then the head/tail cuts. Stats come from the table-level
+        segment_stats.json manifest when fresh — ONE file read per table
+        dir instead of a SegmentReader.open per segment, which is the
+        difference between O(1) and O(segments) driver-side planning at
+        10^5-segment scale; segments the manifest doesn't cover fall back
+        to the per-segment open for zone maps and skip the bloom probe."""
         spec = self._spec
-        stats = None
-        if spec.filters or spec.cuts() or self._spp == 0:
+        counts = self._spp in (None, 1) and spec.counts_only()
+        stats: dict = {}
+        if spec.filters or spec.cuts() or (self._spp is None and not counts):
             from pinot_segment.manifest import stats_for_segments
 
             stats = stats_for_segments(self._segments)
-        survivors = [
-            seg
-            for seg in self._segments
-            if not (
-                spec.filters
-                and _segment_can_be_skipped(seg, spec.filters, stats.get(seg))
+        pruned = dict.fromkeys(ScanPlan.PRUNE_STEPS, 0)
+        survivors = []
+        for seg in self._segments:
+            step = (
+                _segment_prune_step(seg, spec.filters, stats.get(seg))
+                if spec.filters
+                else None
             )
-        ]
+            if step:
+                pruned[step] += 1
+            else:
+                survivors.append(seg)
+        kept = _bloom_prune(survivors, stats, spec.filters)
+        pruned["bloom"] = len(survivors) - len(kept)
+        survivors = kept
         for cut, reverse in spec.cuts():
-            survivors = _head_prune(survivors, stats, cut, reverse)
-        # All segments pruned: Spark still schedules one task for an empty
-        # partitions list (passing None), so hand it an empty sentinel.
-        groups = self._segment_groups(survivors, stats) or [[]]
-        return [PinotInputPartition(tuple(g)) for g in groups]
-
-    def _segment_groups(self, survivors: list, stats) -> list:
-        """The tasks' segment groups, by one of three packing rules."""
-        if self._spp == 0:
-            # auto: greedy doc-count packing from manifest stats, so a
-            # frequent-small-ingest table (10^5 tiny segments at 100 TB
-            # scale) doesn't schedule 10^5 tasks. Segments the manifest
-            # doesn't cover count as a full target each (conservative: they
-            # stay one-per-task rather than over-packing unknown sizes).
-            target = self._AUTO_DOCS_PER_TASK
-            groups: list = []
-            docs = 0
-            for seg in survivors:
-                seg_docs = (stats.get(seg) or {}).get("total_docs", target)
-                if not groups or docs + seg_docs > target:
-                    groups.append([])
-                    docs = 0
-                groups[-1].append(seg)
-                docs += seg_docs
-            return groups
-        spp = self._spp
-        if spp == 1 and self._spec.counts_only():
+            kept = _head_prune(survivors, stats, cut, reverse)
+            pruned["head_tail"] += len(survivors) - len(kept)
+            survivors = kept
+        if counts:
             spp = max(
                 self._COUNT_PACK,
                 -(-len(survivors) // self._COUNT_TASKS_TARGET),
             )
-        return _groups(survivors, spp)
+            groups = _groups(survivors, spp)
+        elif self._spp is None:
+            groups = _doc_count_groups(
+                survivors, stats, self._AUTO_DOCS_PER_TASK
+            )
+        else:
+            groups = _groups(survivors, self._spp)
+        return ScanPlan(tuple(map(tuple, groups)), pruned)
 
     # -- execution (runs on executors) --------------------------------------
 
@@ -830,7 +874,7 @@ class PinotMetadataReader(PinotDataSourceReader):
         self,
         schema: StructType,
         segments: list[str],
-        segments_per_partition: int,
+        segments_per_partition: "int | None",
         mode: str,
         arg: "str | None",
     ) -> None:
@@ -890,12 +934,14 @@ class PinotMetadataReader(PinotDataSourceReader):
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
         yield from filters
 
-    def partitions(self) -> list[PinotInputPartition]:
+    def _plan(self) -> ScanPlan:
         if self._mode == "segment_stats":
             # one task: a manifest read plus at worst one metadata parse
             # per uncovered segment
-            return [PinotInputPartition(tuple(self._segments))]
-        return super().partitions()
+            return ScanPlan(
+                (tuple(self._segments),), dict.fromkeys(ScanPlan.PRUNE_STEPS, 0)
+            )
+        return super()._plan()
 
     def read(self, partition: PinotInputPartition) -> Iterator["pa.RecordBatch"]:
         if partition is None:
@@ -1015,6 +1061,39 @@ class PinotMetadataReader(PinotDataSourceReader):
                 )
 
 
+def explain_scan(
+    path_or_segments, filters=(), columns=None, options=None
+) -> dict:
+    """What a batch scan plans, counted by the planner's own code
+    (``PinotDataSourceReader._plan``, which ``partitions()`` runs), without
+    a Spark session.
+
+    ``path_or_segments`` is a ``load()`` path or a list of v3 segment dirs;
+    ``filters`` are data source API filters (``pyspark.sql.datasource``
+    ``EqualTo``, ``In``, ...) as Spark would push them; ``columns`` is the
+    projection; ``options`` any other read options. Returns the segment
+    count, the segments kept, the segments each pruning step dropped
+    (``pruned_zone_map``, ``pruned_partition_map``, ``pruned_bloom``,
+    ``pruned_head_tail``) and the Spark task count."""
+    opts = dict(options or {})
+    if isinstance(path_or_segments, (str, os.PathLike)):
+        opts["path"] = os.fspath(path_or_segments)
+    else:
+        opts["segments"] = ",".join(map(os.fspath, path_or_segments))
+    if columns is not None:
+        opts["columns"] = ",".join(columns)
+    source = PinotDataSource(opts)
+    reader = source.reader(source.schema())
+    list(reader.pushFilters(list(filters)))
+    plan = reader._plan()
+    return {
+        "segments": len(reader._segments),
+        "kept": sum(map(len, plan.groups)),
+        **{f"pruned_{step}": n for step, n in plan.pruned.items()},
+        "tasks": len(plan.partitions()),
+    }
+
+
 # -- the per-segment read pipeline (runs on executors) -----------------------
 
 
@@ -1108,7 +1187,9 @@ def _scan_segment(spec: ScanSpec, segment_dir: str) -> "pa.Table | None":
     # dictionary, forward-index, or inverted-index work. This is the
     # unclustered-high-card complement to zone maps: at 100 TB a point
     # lookup on orderkey/user_id touches a handful of segments instead of
-    # decoding every one.
+    # decoding every one. Batch planning already probed the segments the
+    # manifest marks bloomed (_bloom_prune); this covers segments without
+    # fresh stats and the stream readers.
     if _bloom_says_absent(reader, filters):
         return None
     # Row range: a pushed range/eq filter on a column the segment declares
@@ -1926,6 +2007,8 @@ def _specs_stats(specs, total_docs: int) -> dict:
             "dtype": spec.declared_dtype().value,
             "has_nulls": nm is not None and bool(np.asarray(nm).any()),
         }
+        if spec.bloom:
+            entry["bloom"] = True  # parity with collect_segment_stats
         if spec.multi_value:
             # MV columns get a stats-free entry (r12 — parity with
             # collect_segment_stats' r11 fix): schema() needs the COMPLETE
@@ -2190,9 +2273,10 @@ def _partition_map_pruned(
     return not (pids & set(values))
 
 
-def _stats_can_be_skipped(stats: dict, filters: list[Filter]) -> bool:
+def _stats_prune_step(stats: dict, filters: list[Filter]) -> "str | None":
     """Zone-map + partition-map pruning from manifest stats alone — no
-    segment open."""
+    segment open: the step that proves the segment empty
+    (``"zone_map"`` / ``"partition_map"``), or None."""
     cols = stats.get("columns", {})
     for f in filters:
         cs = None if isinstance(f, Not) else cols.get(f.attribute[0])
@@ -2202,11 +2286,11 @@ def _stats_can_be_skipped(stats: dict, filters: list[Filter]) -> bool:
             # IS NULL is provably empty only for a column with no
             # null-vector index (the non-nullable default).
             if not cs.get("has_nulls"):
-                return True
+                return "zone_map"
             continue
         if isinstance(f, StringStartsWith):
             if "min" in cs and _startswith_pruned(f.value, cs["min"], cs["max"]):
-                return True
+                return "zone_map"
             continue
         if not isinstance(f, _RANGE_FILTERS):
             continue
@@ -2214,30 +2298,36 @@ def _stats_can_be_skipped(stats: dict, filters: list[Filter]) -> bool:
         if pm is not None and _partition_map_pruned(
             f, pm.get("function"), pm.get("num", 0), pm.get("values", ())
         ):
-            return True
+            return "partition_map"
         if "min" not in cs:
             continue
         if not _filter_bounds_check(f, cs["min"], cs["max"]):
-            return True
-    return False
+            return "zone_map"
+    return None
 
 
-def _segment_can_be_skipped(
+def _segment_prune_step(
     segment_dir: str, filters: list[Filter], stats: dict | None = None
-) -> bool:
-    """Zone-map pruning: skip the segment iff some pushed filter is provably
-    unsatisfiable given a column's (min, max) / nullability / partition
-    stats — from the table manifest when available (``stats``), else
-    collected by opening the segment. A segment that cannot be opened or
-    parsed is kept."""
+) -> "str | None":
+    """Zone-map pruning: the step (``"zone_map"`` / ``"partition_map"``)
+    that proves some pushed filter unsatisfiable given a column's (min,
+    max) / nullability / partition stats — from the table manifest when
+    available (``stats``), else collected by opening the segment — or
+    None. A segment that cannot be opened or parsed is kept."""
     if stats is None:
         from pinot_segment.manifest import collect_segment_stats
 
         try:
             stats = collect_segment_stats(segment_dir)
         except Exception:
-            return False
-    return _stats_can_be_skipped(stats, filters)
+            return None
+    return _stats_prune_step(stats, filters)
+
+
+def _segment_can_be_skipped(
+    segment_dir: str, filters: list[Filter], stats: dict | None = None
+) -> bool:
+    return _segment_prune_step(segment_dir, filters, stats) is not None
 
 
 def _bloom_says_absent(reader, filters) -> bool:
@@ -2261,6 +2351,25 @@ def _bloom_says_absent(reader, filters) -> bool:
         if hit is False:
             return True
     return False
+
+
+def _bloom_prune(survivors: list, stats: dict, filters) -> list:
+    """Planning-time bloom pruning: drop the segments whose bloom filter
+    rules out a pushed EqualTo/In conjunct. Only a segment whose manifest
+    entry marks the probed column ``"bloom": true`` is opened; an entry
+    without the mark (unknown, e.g. written before it existed) or a
+    segment without fresh stats is kept unopened — ``_scan_segment``'s own
+    bloom check still covers it at read time."""
+    probes = [f for f in filters if isinstance(f, (EqualTo, In))]
+    if not probes:
+        return survivors
+    kept = []
+    for seg in survivors:
+        cols = (stats.get(seg) or {}).get("columns", {})
+        bloomed = [f for f in probes if cols.get(f.attribute[0], {}).get("bloom")]
+        if not (bloomed and _bloom_says_absent(_open_segment(seg), bloomed)):
+            kept.append(seg)
+    return kept
 
 
 def _head_prune(survivors, stats, head, reverse: bool = False):

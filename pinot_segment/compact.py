@@ -54,13 +54,14 @@ _INDEX_FLAGS = {
 
 
 def _index_valid(kind: str, meta) -> bool:
-    """Where a rewritten segment may carry each index kind: single-value
-    columns only, inverted on dictionary columns, text/JSON on STRING,
-    range on numerics."""
-    if not meta.is_single_value:
-        return False
+    """Where a rewritten segment may carry each index kind: inverted on
+    dictionary columns (multi-value ones included — bitmap i marks the
+    docs whose array holds value i), every other kind on single-value
+    columns only: text/JSON on STRING, range on numerics."""
     if kind == "inverted":
         return meta.has_dictionary
+    if not meta.is_single_value:
+        return False
     if kind in ("text", "json"):
         return meta.data_type is DataType.STRING
     if kind == "range":

@@ -10,7 +10,9 @@ caches those stats in ONE json file per table directory:
     {table_dir}/segment_stats.json
     {"version": 1, "segments": {"<seg>": {"fingerprint": ..., "total_docs":
       N, "columns": {"<col>": {"dtype": "...", "min": ..., "max": ...,
-      "has_nulls": false}}}}}
+      "has_nulls": false, "bloom": true}}}}}
+
+(``bloom`` only on columns that carry a bloom filter.)
 
 Staleness is detected per segment via a (size, mtime_ns) fingerprint of its
 ``metadata.properties`` — a manifest that doesn't cover the exact current
@@ -93,6 +95,10 @@ def collect_segment_stats(v3_dir: str) -> dict:
             "has_dictionary": bool(cm.has_dictionary),
             "cardinality": int(cm.cardinality),
         }
+        if cm.has_bloom_filter:
+            # planning probes the bloom filter only of segments marked
+            # here; an entry without the mark is "unknown" (kept unopened)
+            entry["bloom"] = True
         cols[name] = entry
         if not cm.is_single_value:
             # MV columns get a stats-free entry (r11): schema() needs the

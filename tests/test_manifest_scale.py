@@ -233,30 +233,32 @@ def test_commit_backfill_cap_skips_manifest(tmp_path, monkeypatch):
     assert not os.path.exists(os.path.join(table, M.MANIFEST_NAME))
 
 
-def test_auto_packing_uses_manifest_doc_counts(big_table):
-    """segments_per_partition=auto packs pruned survivors to a doc-count
-    target from manifest stats — tiny-segment tables don't schedule one
-    task per segment."""
+def test_auto_packing_uses_manifest_doc_counts(big_table, monkeypatch):
+    """The default packing (``segments_per_partition=auto``) groups pruned
+    survivors to a doc-count target from manifest stats — about two tasks
+    per planning CPU, capped at _AUTO_DOCS_PER_TASK — so tiny-segment
+    tables don't schedule one task per segment."""
     from pyspark.sql.types import LongType, StructField, StructType
 
+    monkeypatch.setattr(ds, "_planning_cpus", lambda: 4)
     segs = [
         os.path.join(big_table, d, "v3")
         for d in sorted(os.listdir(big_table))
         if os.path.isdir(os.path.join(big_table, d, "v3"))
     ]
     schema = StructType([StructField("k", LongType())])
-    # unfiltered: 1000 segments x 8 docs -> all fit one auto bucket
-    reader = ds.PinotDataSourceReader(schema, segs, 0)
+    # unfiltered: 1000 segments x 8 docs -> 8 contiguous 1000-doc tasks
+    reader = ds.PinotDataSourceReader(schema, segs)
     parts = reader.partitions()
-    assert len(parts) == 1 and len(parts[0].segment_dirs) == N_SEGMENTS
-    # filtered: survivors only, still packed
-    reader = ds.PinotDataSourceReader(schema, segs, 0)
+    assert [len(p.segment_dirs) for p in parts] == [N_SEGMENTS // 8] * 8
+    assert [d for p in parts for d in p.segment_dirs] == segs
+    # filtered: sized from the survivors only (80 docs -> 10-doc target)
+    reader = ds.PinotDataSourceReader(schema, segs)
     list(reader.pushFilters([ds.LessThan(("k",), 10_000)]))  # first 10 segs
     parts = reader.partitions()
-    assert len(parts) == 1
-    assert len(parts[0].segment_dirs) == 10
-    # target respected: shrink the target so packing splits
-    reader = ds.PinotDataSourceReader(schema, segs, 0)
+    assert [p.segment_dirs for p in parts] == [(s,) for s in segs[:10]]
+    # the cap wins over the CPU-sized target
+    reader = ds.PinotDataSourceReader(schema, segs)
     reader._AUTO_DOCS_PER_TASK = ROWS_PER_SEG * 100
     parts = reader.partitions()
     assert len(parts) == 10  # 1000 segs x 8 docs / 800-doc target

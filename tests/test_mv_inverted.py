@@ -120,3 +120,35 @@ def test_spark_sink_writes_mv_inverted(spark, tmp_path):
     m = r.inverted_match_mask("mods", [2])
     assert m is not None, "sink dropped the MV inverted flag"
     assert sorted(np.asarray(r.read_column("doc_id"))[m].tolist()) == [1, 2]
+
+
+def test_merge_keeps_mv_inverted_index(tmp_path):
+    """A rewrite keeps an MV dictionary column's inverted index (merge,
+    filter and reindex share the index-validity rule): the merged bitmaps
+    answer membership over both members' rows."""
+    from pinot_segment import compact
+
+    more = [[9, 1], [], [3]]
+    members = [
+        str(
+            write_segment(
+                tmp_path / name,
+                name,
+                "t",
+                [
+                    ColumnSpec(
+                        "mods", DataType.INT, rows, multi_value=True, inverted=True
+                    )
+                ],
+            )
+        )
+        for name, rows in (("a", ROWS), ("b", more))
+    ]
+    merged = SegmentReader.open(
+        str(compact.merge_segments(members, tmp_path / "m", "m", "t"))
+    )
+    assert merged.metadata.columns["mods"].has_inverted_index
+    for v in (1, 2, 3, 7, 9, 4):
+        m = merged.inverted_match_mask("mods", [v])
+        assert m is not None
+        assert m.tolist() == [v in row for row in ROWS + more], v

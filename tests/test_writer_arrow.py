@@ -180,16 +180,27 @@ def test_specs_stats_parity(tmp_path):
     mask = np.array([False, False, True, False, False, False, False])
     vals = ["m" if m else v for v, m in zip(STRINGS, mask)]
 
+    from pinot_segment.manifest import collect_segment_stats
+
     def build(values):
         specs = [
             ColumnSpec("s", DataType.STRING, values),
             ColumnSpec("n", DataType.STRING, values, null_mask=mask.copy()),
             ColumnSpec("r", DataType.STRING, values, raw=True),
+            ColumnSpec("b", DataType.STRING, values, bloom=True),
+            ColumnSpec("rb", DataType.STRING, values, raw=True, bloom=True),
         ]
-        write_segment(tmp_path / f"st_{id(values)}", "seg", "t", specs)
-        return _specs_stats(specs, len(vals))
+        v3 = write_segment(tmp_path / f"st_{id(values)}", "seg", "t", specs)
+        return _specs_stats(specs, len(vals)), collect_segment_stats(str(v3))
 
-    assert build(list(vals)) == build(pa.array(vals))
+    (from_list, opened), (from_arrow, _) = build(list(vals)), build(pa.array(vals))
+    assert from_list == from_arrow
+    # the sink's stats and a rebuilt manifest mark the same bloomed columns
+    for stats in (from_list, opened):
+        marks = {
+            c: cs["bloom"] for c, cs in stats["columns"].items() if "bloom" in cs
+        }
+        assert marks == {"b": True, "rb": True}
 
 
 def test_pack_bits_matches_shift_and_mask_reference():
